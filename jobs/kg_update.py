@@ -21,23 +21,31 @@ checked by the ``kg_cooccur_incremental`` driver query.  Measured
 (BENCH/BASELINE.md): absorbing a 10% delta costs ~8-24% of a rebuild.
 
 Commit protocol (single writer per root, crash-safe, idempotent) —
-implemented in ``onto_text_tag_spark/plans/kg_absorb.py`` (also the
-``foreachBatch`` core of the streaming ingest sink):
+the staged-commit primitive of ``onto_text_tag_spark/sinks.py``, driven
+by ``onto_text_tag_spark/plans/kg_absorb.py`` (also the ``foreachBatch``
+core of the streaming ingest sink):
 
-1. stage the delta (mentions, doc_terms, mention triples, delta edges,
-   merged edges) as ordinary resumable snapshots under
-   ``<root>/_staging/<batch_tag>/`` — a re-run after any crash reuses
-   them via their input fingerprints;
-2. append staged part-files into the live stage dirs under
-   deterministic ``batch-<tag>-NNNNN.parquet`` names (a re-run skips
-   files that already landed);
-3. swap the merged co-occurrence subtree in via rename-old → copy-new →
-   drop-old (recovered on restart);
-4. seal each touched stage with ``sinks.commit_stage``: manifest
-   rebuilt from parquet footers, marker re-fingerprinted, and a new
-   snapshot appended to the stage's ``_SNAPSHOT_LOG.jsonl`` — the
-   Iceberg metadata commit that makes the batch visible;
-5. drop the staging dir.
+1. ``sinks.begin_commit`` recovers every torn swap and append under the
+   root, no-ops a batch already in the ``triples`` snapshot log, and
+   names the staging dir ``<root>/_staging/<batch_tag>/``;
+2. stage the delta (mentions, doc_terms, mention triples, delta edges,
+   merged edges) there as ordinary resumable snapshots — a re-run after
+   any crash reuses them via their input fingerprints;
+3. ``sinks.finish_commit`` runs the ops in order: staged part-files
+   APPEND into the live stage dirs under deterministic
+   ``batch-<tag>-NNNNN.parquet`` names (each copied to a hidden
+   temporary name and renamed into place; a re-run skips files that
+   landed), and the merged co-occurrence subtree REPLACES
+   ``triples/data/pred=co_occurs_with`` by copy-then-rename — copy into
+   a hidden ``.swap-new`` sibling, rename live aside to ``.swap-old``,
+   rename the complete copy in — so recovery only ever keeps a complete
+   tree;
+4. it then seals each touched stage (``triples`` last — the commit
+   point): manifest rebuilt from parquet footers, marker
+   re-fingerprinted, and a new snapshot appended to the stage's
+   ``_SNAPSHOT_LOG.jsonl`` — the Iceberg metadata commit that makes the
+   batch visible;
+5. and drops the staging dir.
 
 A batch whose fingerprint already appears in the ``triples`` snapshot
 log is a committed no-op: re-submitting the same delta reports the live

@@ -34,27 +34,19 @@ a delta pushes a bucket over the cap — this absorb treats base edges as
 committed history (it never un-verifies a pair), which is the safer
 semantics for an append-only corpus.
 
-Commit protocol (single writer per root, crash-safe, idempotent),
-mirroring ``plans/kg_absorb.py``:
-
-1. stage delta snapshots under ``<root>/_staging/<tag>/`` (resumable
-   via input fingerprints — a crashed run re-reads, never recomputes);
-2. file-append delta signatures into ``signatures``, delta survivors
-   into ``deduped``, demoted base ids into ``demoted`` (deterministic
-   ``batch-<tag>-NNNNN.parquet`` names — re-runs skip landed files);
-3. swap the merged ``clusters`` subtree (rename-old → copy-new →
-   drop-old, torn states recovered on restart);
-4. seal every touched stage via ``sinks.commit_stage``; the
-   ``clusters`` seal carries the batch fingerprint and is LAST — it is
-   the commit point: a batch whose fingerprint is already in the
-   clusters snapshot log is a committed no-op.
+Commit protocol (single writer per root, crash-safe, idempotent): the
+``sinks.begin_commit`` / ``finish_commit`` staged commit, like
+``plans/kg_absorb.py`` — delta snapshots staged under
+``<root>/_staging/<tag>/``; delta signatures, survivors and demoted
+base ids APPEND into ``signatures`` / ``deduped`` / ``demoted``; the
+merged ``clusters`` map REPLACES its stage and is sealed LAST — the
+commit point: a batch whose fingerprint is already in the clusters
+snapshot log is a committed no-op.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -70,22 +62,14 @@ from onto_text_tag_spark.operators.dedup import (
     ngram_jaccard_pairs,
     signature_jaccard_filter,
 )
-from onto_text_tag_spark.plans.kg_absorb import (
-    _append_batch_files,
-    _recover_swap,
-    _swap_subtree,
-)
 from onto_text_tag_spark.sinks import (
-    append_stage_iceberg,
-    commit_stage,
-    drop_stage_table,
-    iceberg_available,
+    CommitOp,
+    begin_commit,
+    finish_commit,
     read_manifest,
     read_stage,
-    replace_stage_iceberg,
     run_stage,
     snapshot_log,
-    write_stage,
 )
 
 
@@ -121,78 +105,40 @@ def fold_demotions(spark: SparkSession, root: str) -> dict:
     idempotent and crash-safe: staged swap per subtree, delete-set
     clear LAST.  Later absorbs are unaffected: demotion detection runs
     off the clusters map, not the delete set, and newly demoted ids
-    append into the (now empty) ``demoted`` stage as before.
-
-    Works under BOTH stage backends (round 5): under an Iceberg
-    session catalog the rewrite and the delete-set clear are staged
-    ``createOrReplace`` commits via ``write_stage``, keeping each
-    stage's input fingerprint (content-identical maintenance)."""
-    ice = iceberg_available(spark)
-    import time as _time
-
-    t0 = _time.time()
+    append into the (now empty) ``demoted`` stage as before.  Works
+    under both stage backends."""
+    t0 = time.time()
+    staging = begin_commit(root, "fold_demotions")
     try:
         man = read_manifest(root, "demoted")
     except OSError:
         man = None
     if not man or man.get("total_rows", 0) == 0:
         return {"status": "noop_nothing_demoted",
-                "sec": round(_time.time() - t0, 2)}
-    live_deduped = os.path.join(root, "deduped", "data")
-    live_demoted = os.path.join(root, "demoted", "data")
-    if not ice:
-        _recover_swap(live_deduped)
-        _recover_swap(live_demoted)
+                "sec": round(time.time() - t0, 2)}
 
     demoted = read_stage(spark, root, "demoted")
     (id_col,) = demoted.columns
     n_demoted = demoted.count()
-    staging = os.path.join(root, "_staging", "fold_demotions")
-    shutil.rmtree(staging, ignore_errors=True)
-    fold_metrics = {"fold_demotions": {"ids_folded": n_demoted}}
     run_stage(
         spark, staging, "deduped",
         lambda: read_stage(spark, root, "deduped")
         .join(demoted, id_col, "left_anti"),
         input_fingerprint=f"fold-{n_demoted}",
     )
-    empty = spark.createDataFrame([], f"{id_col} string").repartition(1)
-    if ice:
-        for stage, df in (
-            ("deduped", read_stage(spark, staging, "deduped")),
-            ("demoted", empty),  # delete-set clear LAST = commit point
-        ):
-            m = read_manifest(root, stage)
-            write_stage(
-                df, root, stage,
-                input_fingerprint=m["input_fingerprint"],
-                metrics={**(m.get("metrics") or {}), **fold_metrics},
-            )
-        drop_stage_table(spark, staging, "deduped")
-    else:
-        _swap_subtree(os.path.join(staging, "deduped", "data"),
-                      live_deduped)
-        run_stage(spark, staging, "demoted", lambda: empty,
-                  input_fingerprint=f"fold-{n_demoted}")
-        _swap_subtree(os.path.join(staging, "demoted", "data"),
-                      live_demoted)
-
-        for stage in ("deduped", "demoted"):
-            m = read_manifest(root, stage)
-            commit_stage(
-                root, stage, input_fingerprint=m["input_fingerprint"],
-                metrics={**(m.get("metrics") or {}), **fold_metrics},
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    return {"status": "folded", "n_ids_folded": n_demoted,
-            "sec": round(_time.time() - t0, 2)}
-
-
-def dedup_batch_already_committed(root: str, batch_fp: str) -> bool:
-    return any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(root, "clusters")
+    run_stage(
+        spark, staging, "demoted",
+        lambda: spark.createDataFrame(
+            [], f"{id_col} string").repartition(1),
+        input_fingerprint=f"fold-{n_demoted}",
     )
+    finish_commit(spark, root, staging, [
+        CommitOp("replace", "deduped", "deduped"),
+        # delete-set clear LAST = commit point
+        CommitOp("replace", "demoted", "demoted"),
+    ], metrics={"fold_demotions": {"ids_folded": n_demoted}})
+    return {"status": "folded", "n_ids_folded": n_demoted,
+            "sec": round(time.time() - t0, 2)}
 
 
 def init_dedup_root(
@@ -263,16 +209,10 @@ def absorb_dedup_batch(
     candidate texts (a semi-joined 2-column scan).  Knobs must match
     the base run — the signature width is asserted against the store.
 
-    Works under BOTH stage backends (round 5): file-backed roots
-    commit via ``_append_batch_files`` + ``_swap_subtree`` +
-    ``commit_stage``; under an Iceberg session catalog the three
-    append-grown stages (signatures / deduped / demoted) commit via
-    ``sinks.append_stage_iceberg`` and the merged ``clusters``
-    relation — a keyed replace, not an append — via
-    ``sinks.replace_stage_iceberg`` from the MATERIALIZED staging
-    snapshot, sealed LAST as the commit point exactly like the file
-    path."""
-    ice = iceberg_available(spark)
+    Works under both stage backends: the three append-grown stages
+    (signatures / deduped / demoted) APPEND and the merged ``clusters``
+    relation — a keyed replace, not an append — REPLACES its stage,
+    sealed LAST as the commit point."""
     t0 = time.time()
     stage_sec: dict[str, float] = {}
 
@@ -283,7 +223,6 @@ def absorb_dedup_batch(
         return out
 
     tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
-    live_clusters = os.path.join(root, "clusters", "data")
 
     def _live_count() -> int:
         n = read_manifest(root, "deduped")["total_rows"]
@@ -293,16 +232,14 @@ def absorb_dedup_batch(
             pass
         return n
 
-    if dedup_batch_already_committed(root, batch_fp):
+    staging = begin_commit(root, tag, batch_fp, log_stage="clusters")
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "batch_fingerprint": batch_fp,
             "n_docs_live": _live_count(),
             "sec": round(time.time() - t0, 2),
         }
-
-    if not ice:
-        _recover_swap(live_clusters)
 
     base_sigs = read_stage(spark, root, "signatures")
     has_sh = "sh" in base_sigs.columns
@@ -329,7 +266,6 @@ def absorb_dedup_batch(
         base_sigs.select(id_col), on=id_col, how="left_anti"
     )
 
-    staging = os.path.join(root, "_staging", tag)
     sig_fn = minhash_signatures if portable_minhash else minhash_signatures_np
     sig_kwargs = {} if portable_minhash else {
         "method": minhash_method, "with_shingles": has_sh,
@@ -457,57 +393,19 @@ def absorb_dedup_batch(
     n_candidates = read_manifest(staging, "candidates")["total_rows"]
     n_verified = read_manifest(staging, "verified")["total_rows"]
 
-    def _commit():
-        metrics = {
-            "batch_fingerprint": batch_fp,
-            "batch_docs": n_new,
-            "batch_survivors": n_survivors,
-            "batch_demoted_base": n_demoted,
-        }
-        if ice:
-            # appends first, clusters replace LAST = commit point
-            # (matches the file path's seal order); every commit reads
-            # the MATERIALIZED staging snapshot, per-stage idempotent
-            for stage in ("signatures", "deduped", "demoted"):
-                append_stage_iceberg(
-                    read_stage(spark, staging, stage), spark, root,
-                    stage, batch_fp, metrics=metrics)
-            replace_stage_iceberg(
-                read_stage(spark, staging, "clusters"), spark, root,
-                "clusters", batch_fp, metrics=metrics)
-            for stage in ("signatures", "exact_edges", "candidates",
-                          "verified", "clusters", "demoted", "deduped"):
-                drop_stage_table(spark, staging, stage)
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        _append_batch_files(
-            os.path.join(staging, "signatures", "data"),
-            os.path.join(root, "signatures", "data"), tag)
-        _append_batch_files(
-            os.path.join(staging, "deduped", "data"),
-            os.path.join(root, "deduped", "data"), tag)
-        _append_batch_files(
-            os.path.join(staging, "demoted", "data"),
-            os.path.join(root, "demoted", "data"), tag)
-        _swap_subtree(
-            os.path.join(staging, "clusters", "data"), live_clusters)
-
-        demoted_schema = read_manifest(staging, "demoted").get("schema")
-        for stage, schema in (
-            ("signatures", None), ("deduped", None),
-            ("demoted", demoted_schema), ("clusters", None),
-        ):
-            try:
-                prev = read_manifest(root, stage)["input_fingerprint"]
-            except OSError:
-                prev = "bootstrap"
-            combined = hashlib.md5(f"{prev}+{batch_fp}".encode()).hexdigest()
-            # clusters is sealed last: its snapshot log is the commit point
-            commit_stage(root, stage, input_fingerprint=combined,
-                         metrics=metrics, schema_json=schema)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    timed("commit", _commit)
+    metrics = {
+        "batch_fingerprint": batch_fp,
+        "batch_docs": n_new,
+        "batch_survivors": n_survivors,
+        "batch_demoted_base": n_demoted,
+    }
+    # clusters is sealed last: its snapshot log is the commit point
+    timed("commit", lambda: finish_commit(spark, root, staging, [
+        CommitOp("append", "signatures", "signatures"),
+        CommitOp("append", "deduped", "deduped"),
+        CommitOp("append", "demoted", "demoted"),
+        CommitOp("replace", "clusters", "clusters"),
+    ], metrics, batch_fp=batch_fp))
 
     return {
         "status": "committed",

@@ -30,17 +30,15 @@ the pair set of the family's batch operator over ``A ∪ B`` at the same
 committed history, every pair with a delta endpoint is found by the
 delta-vs-store pass.
 
-Commit protocol mirrors ``plans/dedup_absorb.py`` (single writer per
-root, crash-safe, idempotent): stage delta snapshots, file-append into
-the live stages under deterministic batch-prefixed names, seal with
-``{family}_dups`` LAST — its snapshot log is the commit point.
+Commit protocol: the ``sinks.begin_commit`` / ``finish_commit`` staged
+commit (single writer per root, crash-safe, idempotent) — delta
+snapshots staged, appended into the live stages, ``{family}_dups``
+sealed LAST: its snapshot log is the commit point.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,16 +54,13 @@ from onto_text_tag_spark.operators.multimodal import (
     video_dhash,
     video_frame_sigs,
 )
-from onto_text_tag_spark.plans.kg_absorb import _append_batch_files
 from onto_text_tag_spark.sinks import (
-    append_stage_iceberg,
-    commit_stage,
-    drop_stage_table,
-    iceberg_available,
+    CommitOp,
+    begin_commit,
+    finish_commit,
     read_manifest,
     read_stage,
     run_stage,
-    snapshot_log,
     write_stage,
 )
 
@@ -141,14 +136,6 @@ def init_media_root(spark: SparkSession, root: str,
     )
 
 
-def media_batch_already_committed(root: str, batch_fp: str,
-                                  family: str = "image") -> bool:
-    return any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(root, f"{family}_dups")
-    )
-
-
 def read_media_dups(spark: SparkSession, root: str,
                     family: str = "image") -> DataFrame:
     """The live near-duplicate pair ledger (append-grown)."""
@@ -167,30 +154,23 @@ def absorb_media_batch(
     """Commit one media batch into perceptual-dedup root ``root``
     (stage → append → seal).  Returns batch metrics; an
     already-committed fingerprint returns a no-op marker without
-    touching the store.
-
-    Works under BOTH stage backends: file-backed roots commit via
-    ``_append_batch_files`` + ``commit_stage``; under an Iceberg
-    session catalog the same staged snapshots commit via
-    ``sinks.append_stage_iceberg`` (both media stages — signatures and
-    the pair ledger — are append-grown, so like paragraph_absorb this
-    path needs no swap analog)."""
+    touching the store.  Works under both stage backends: both media
+    stages — signatures and the pair ledger — are append-grown."""
     hash_fn, default_dist = _family(family)
     if max_dist is None:
         max_dist = default_dist
-    ice = iceberg_available(spark)
     t0 = time.time()
-    if media_batch_already_committed(root, batch_fp, family):
+    sigs_stage, dups_stage = f"{family}_sigs", f"{family}_dups"
+    tag = hashlib.md5(
+        (family + ":" + batch_fp).encode()).hexdigest()[:12]
+    staging = begin_commit(root, f"{family[:3]}-{tag}", batch_fp,
+                           log_stage=dups_stage)
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "batch_fingerprint": batch_fp,
             "sec": round(time.time() - t0, 2),
         }
-
-    tag = hashlib.md5(
-        (family + ":" + batch_fp).encode()).hexdigest()[:12]
-    staging = os.path.join(root, "_staging", f"{family[:3]}-{tag}")
-    sigs_stage, dups_stage = f"{family}_sigs", f"{family}_dups"
     stored = read_stage(spark, root, sigs_stage)
 
     # decode+hash only never-seen ids; in-batch repeats collapse first
@@ -223,31 +203,11 @@ def absorb_media_batch(
         "batch_items": n_new_items,
         "batch_pairs": n_new_pairs,
     }
-    if ice:
-        # sigs first, dups LAST = commit point (matches the file
-        # path's seal order); one atomic table append per stage from
-        # the MATERIALIZED staging snapshots, per-stage idempotent
-        for src, dst in (("sigs_delta", sigs_stage),
-                         ("dups_delta", dups_stage)):
-            append_stage_iceberg(
-                read_stage(spark, staging, src), spark, root, dst,
-                batch_fp, metrics=metrics)
-        for src in ("sigs_delta", "dups_delta"):
-            drop_stage_table(spark, staging, src)
-    else:
-        _append_batch_files(
-            os.path.join(staging, "sigs_delta", "data"),
-            os.path.join(root, sigs_stage, "data"), tag)
-        _append_batch_files(
-            os.path.join(staging, "dups_delta", "data"),
-            os.path.join(root, dups_stage, "data"), tag)
-        for stage in (sigs_stage, dups_stage):  # dups LAST: commit
-            prev = read_manifest(root, stage)["input_fingerprint"]
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            commit_stage(root, stage, input_fingerprint=combined,
-                         metrics=metrics)
-    shutil.rmtree(staging, ignore_errors=True)
+    # dups LAST = commit point
+    finish_commit(spark, root, staging, [
+        CommitOp("append", "sigs_delta", sigs_stage),
+        CommitOp("append", "dups_delta", dups_stage),
+    ], metrics, batch_fp=batch_fp)
     return {
         "status": "committed",
         "batch_fingerprint": batch_fp,
@@ -264,10 +224,6 @@ def absorb_media_batch(
 
 def init_image_root(spark: SparkSession, root: str) -> None:
     init_media_root(spark, root, "image")
-
-
-def image_batch_already_committed(root: str, batch_fp: str) -> bool:
-    return media_batch_already_committed(root, batch_fp, "image")
 
 
 def read_image_dups(spark: SparkSession, root: str) -> DataFrame:

@@ -32,28 +32,18 @@ assignment over b1 ∪ b2`` is pinned by tests/test_ivf_absorb.py.
 from __future__ import annotations
 
 import hashlib
-import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from onto_text_tag_spark.operators.similarity import ivf_cell_assignments
-from onto_text_tag_spark.plans.kg_absorb import (
-    _append_batch_files,
-    _recover_swap,
-    _swap_subtree,
-)
 from onto_text_tag_spark.sinks import (
-    append_stage_iceberg,
-    commit_stage,
-    drop_stage_table,
-    iceberg_available,
+    CommitOp,
+    begin_commit,
+    finish_commit,
     read_manifest,
     read_stage,
-    replace_stage_iceberg,
     run_stage,
-    snapshot_log,
     write_stage,
 )
 
@@ -121,34 +111,23 @@ def absorb_embeddings(
     additively.  Exactly-once via the batch fingerprint in the
     ``ivf_cells`` snapshot log (the last seal = the commit point).
 
-    Works under BOTH stage backends: file-backed roots commit via
-    ``_append_batch_files`` + ``_swap_subtree`` + ``commit_stage``;
-    under an Iceberg session catalog the assignment rows APPEND
-    (``sinks.append_stage_iceberg``) and the keyed-additive cell
-    stats — a genuine MERGE, not a row append — land via
-    ``sinks.replace_stage_iceberg``: one atomic ``createOrReplace``
-    from the MATERIALIZED merged-stats staging snapshot (reading the
-    live table while replacing it is the hazard the staging
-    materialization exists to prevent)."""
-    ice = iceberg_available(spark)
+    Works under both stage backends: the assignment rows APPEND and
+    the keyed-additive cell stats — a genuine MERGE, not a row append —
+    REPLACE their stage from the MATERIALIZED merged-stats staging
+    snapshot (reading the live stage while replacing it is the hazard
+    the staging materialization exists to prevent)."""
     t0 = time.time()
     tag = hashlib.md5(("ivf:" + batch_fp).encode()).hexdigest()[:12]
     stored_fp = read_manifest(root, "ivf_centroids")["metrics"][
         "centroid_fingerprint"]
 
-    if any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(root, "ivf_cells")
-    ):
+    staging = begin_commit(root, tag, batch_fp, log_stage="ivf_cells")
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "n_vecs_total": read_manifest(root, "ivf_cells")["total_rows"],
             "sec": round(time.time() - t0, 2),
         }
-
-    live_stats = os.path.join(root, "ivf_cell_stats", "data")
-    if not ice:
-        _recover_swap(live_stats)
 
     centroids = load_centroids(spark, root)
     if _centroid_fingerprint(centroids) != stored_fp:
@@ -172,7 +151,6 @@ def absorb_embeddings(
         .join(seen, "vec_id", "left_anti")
     )
 
-    staging = os.path.join(root, "_staging", tag)
     delta_cells = run_stage(
         spark, staging, "cells_delta",
         lambda: ivf_cell_assignments(new_vecs, centroids),
@@ -200,31 +178,11 @@ def absorb_embeddings(
 
     metrics = {"batch_fingerprint": batch_fp, "batch_vecs": n_new,
                "centroid_fingerprint": stored_fp}
-    if ice:
-        # stats replace first, cells append LAST = commit point
-        # (matches the file path's seal order); both commits read the
-        # MATERIALIZED staging snapshots and are per-stage idempotent
-        replace_stage_iceberg(
-            read_stage(spark, staging, "merged_stats"), spark, root,
-            "ivf_cell_stats", batch_fp, metrics=metrics)
-        append_stage_iceberg(
-            read_stage(spark, staging, "cells_delta"), spark, root,
-            "ivf_cells", batch_fp, metrics=metrics)
-        for stage in ("cells_delta", "merged_stats"):
-            drop_stage_table(spark, staging, stage)
-    else:
-        _append_batch_files(
-            os.path.join(staging, "cells_delta", "data"),
-            os.path.join(root, "ivf_cells", "data"), tag)
-        _swap_subtree(os.path.join(staging, "merged_stats", "data"),
-                      live_stats)
-        for stage in ("ivf_cell_stats", "ivf_cells"):  # cells = commit
-            prev = read_manifest(root, stage)["input_fingerprint"]
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            commit_stage(root, stage, input_fingerprint=combined,
-                         metrics=metrics)
-    shutil.rmtree(staging, ignore_errors=True)
+    # cells append LAST = commit point
+    finish_commit(spark, root, staging, [
+        CommitOp("replace", "merged_stats", "ivf_cell_stats"),
+        CommitOp("append", "cells_delta", "ivf_cells"),
+    ], metrics, batch_fp=batch_fp)
     return {
         "status": "committed",
         "n_new_vecs": n_new,

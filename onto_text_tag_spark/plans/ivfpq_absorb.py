@@ -60,9 +60,9 @@ from onto_text_tag_spark.plans.pq_absorb import (
     load_codebooks,
 )
 from onto_text_tag_spark.sinks import (
+    batch_committed,
     read_manifest,
     read_stage,
-    snapshot_log,
     write_stage,
 )
 import os
@@ -135,11 +135,8 @@ def ivfpq_batch_already_committed(root: str, batch_fp: str) -> bool:
     """Committed means committed in BOTH halves (the pq codes seal is
     the composed commit point — it lands last)."""
     ivf_root, pq_root = _half_roots(root)
-    return all(
-        any(s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-            for s in snapshot_log(r, stage))
-        for r, stage in ((ivf_root, "ivf_cells"), (pq_root, "pq_codes"))
-    )
+    return (batch_committed(ivf_root, "ivf_cells", batch_fp)
+            and batch_committed(pq_root, "pq_codes", batch_fp))
 
 
 def absorb_ivfpq_batch(

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -37,68 +36,27 @@ from onto_text_tag_spark.operators.cooccur import (
 from onto_text_tag_spark.operators.tagger import tag_documents
 from onto_text_tag_spark.plans.kg_pipeline import extract_texts
 from onto_text_tag_spark.sinks import (
-    append_stage_iceberg,
-    commit_stage,
-    drop_stage_table,
-    iceberg_available,
+    CommitOp,
+    begin_commit,
+    finish_commit,
     read_manifest,
     read_stage,
-    replace_stage_iceberg,
-    replace_stage_partitions_iceberg,
     require_file_backed_stages,
     run_stage,
-    seal_stage_iceberg,
     snapshot_log,
     stage_is_current,
+    stage_is_table_backed,
     write_stage,
     write_stage_branches,
 )
 
 
-def _append_batch_files(src_data: str, dst_data: str, tag: str) -> int:
-    """Idempotent file-level append: copy staged part-files into the
-    live stage dir under deterministic batch-prefixed names (a re-run
-    skips files that already landed)."""
-    os.makedirs(dst_data, exist_ok=True)
-    copied = 0
-    files = sorted(
-        f for f in os.listdir(src_data) if f.endswith(".parquet")
-    )
-    for i, f in enumerate(files):
-        dst = os.path.join(dst_data, f"batch-{tag}-{i:05d}.parquet")
-        if not os.path.exists(dst):
-            shutil.copy2(os.path.join(src_data, f), dst)
-            copied += 1
-    return copied
-
-
-def _swap_subtree(staged_data: str, live_dir: str) -> None:
-    """Replace ``live_dir`` with the staged parquet dir: rename-old →
-    copy-new → drop-old.  On an object store this is Iceberg's atomic
-    manifest swap; on a filesystem the torn states are recovered by
-    ``_recover_swap``."""
-    bak = live_dir + ".swap-old"
-    if os.path.exists(live_dir):
-        os.rename(live_dir, bak)
-    shutil.copytree(staged_data, live_dir)
-    shutil.rmtree(bak, ignore_errors=True)
-
-
-def _recover_swap(live_dir: str) -> None:
-    bak = live_dir + ".swap-old"
-    if not os.path.exists(bak):
-        return
-    if os.path.exists(live_dir):
-        shutil.rmtree(bak)  # copy completed; drop the backup
-    else:
-        os.rename(bak, live_dir)  # roll the torn swap back
-
-
-def batch_already_committed(kg_root: str, batch_fp: str) -> bool:
-    return any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(kg_root, "triples")
-    )
+def _pred_rows(spark: SparkSession, kg_root: str, pred: str) -> DataFrame:
+    """One ``pred=`` branch of the physical triples stage as
+    ``(subj, obj, weight)``."""
+    return (read_stage(spark, kg_root, "triples")
+            .where(F.col("pred") == pred)
+            .select("subj", "obj", "weight"))
 
 
 def _main_committed_fps(kg_root: str) -> set:
@@ -206,18 +164,11 @@ def absorb_batch(
     back-fills its side stage from the batch-tagged mention files
     while the main commit stays a no-op.
 
-    Under an Iceberg session catalog the SAME staged snapshots commit
-    table-level: mentions/doc_terms/mention-triples rows APPEND
-    (``sinks.append_stage_iceberg`` + a local append marker for the
-    within-stage mention-triples append), and the merged co-occurrence
-    branch lands via ``writeTo(...).overwritePartitions()`` — Iceberg's
-    dynamic partition replacement IS the ``_swap_subtree`` analog for
-    the ``pred=co_occurs_with`` branch.  Replays are safe because the
-    staged snapshots are fingerprint-materialized BEFORE any live
-    mutation (re-running overwrites with identical content).  The
-    ``--sketch``/``--trends`` side stages still use staged file swaps
-    and refuse under a catalog."""
-    ice = iceberg_available(spark)
+    The commit is one ``sinks.finish_commit``: mentions/doc_terms/
+    mention-triples rows APPEND, the merged co-occurrence branch
+    REPLACES the ``pred=co_occurs_with`` partition — file appends +
+    a directory swap on a file-backed root, table appends +
+    ``overwritePartitions`` under an Iceberg session catalog."""
     t0 = time.time()
     stage_sec: dict[str, float] = {}
 
@@ -228,11 +179,8 @@ def absorb_batch(
         return out
 
     tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
-    live_triples = os.path.join(kg_root, "triples", "data")
-    live_cooccur = os.path.join(live_triples, "pred=co_occurs_with")
-    live_mention_triples = os.path.join(live_triples, "pred=mentions")
-
-    if batch_already_committed(kg_root, batch_fp):
+    staging = begin_commit(kg_root, tag, batch_fp, log_stage="triples")
+    if staging is None:
         out = {
             "status": "noop_already_committed",
             "batch_fingerprint": batch_fp,
@@ -245,14 +193,14 @@ def absorb_batch(
         # Replaying a main-committed batch with --sketch/--trends lets a
         # later-enabled side stage BACK-FILL this batch: its mentions are
         # identifiable in the live stage by their batch-tagged filenames
-        # (_append_batch_files), so the side absorbs run from exactly
+        # (finish_commit appends), so the side absorbs run from exactly
         # this batch's delta while the main commit stays a no-op.  The
         # side stages' own logs make true replays no-op in turn.
         if sketch_k or trends_bucket:
             import warnings
 
             mdata = os.path.join(kg_root, "mentions", "data")
-            if ice:
+            if stage_is_table_backed(kg_root, "mentions"):
                 # table-backed stages have no batch-tagged files: the
                 # sketch back-fill stays exact via its full-stage
                 # catch-up fold; the trends back-fill (below) warns on
@@ -311,9 +259,6 @@ def absorb_batch(
             out["sec"] = round(time.time() - t0, 2)
         return out
 
-    if not ice:
-        _recover_swap(live_cooccur)
-
     docs = extract_texts(docs)
     if lang and "lang" in docs.columns:
         docs = docs.where(F.col("lang") == lang)
@@ -329,7 +274,6 @@ def absorb_batch(
     )
 
     # --- stage the delta as ordinary resumable snapshots ------------------
-    staging = os.path.join(kg_root, "_staging", tag)
     delta_mentions = timed("tag_delta", lambda: run_stage(
         spark, staging, "mentions",
         lambda: tag_documents(new_docs, dict_rows, id_col=id_col),
@@ -357,18 +301,8 @@ def absorb_batch(
             delta_doc_terms, assume_deduped=True),
         input_fingerprint=batch_fp,
     ))
-    if ice:
-        old_edges = (
-            read_stage(spark, kg_root, "triples")
-            .where(F.col("pred") == "co_occurs_with")
-            .select(F.col("subj").alias("src"),
-                    F.col("obj").alias("dst"), "weight")
-        )
-    else:
-        old_edges = spark.read.parquet(live_cooccur).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst"),
-            "weight"
-        )
+    old_edges = _pred_rows(spark, kg_root, "co_occurs_with").select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst"), "weight")
     timed("merge_edges", lambda: run_stage(
         spark, staging, "merged_cooccur",
         lambda: merge_cooccurrence_edges(old_edges, delta_edges).select(
@@ -398,62 +332,16 @@ def absorb_batch(
         "batch_docs": n_new_docs,
         "batch_mentions": n_new_mentions,
     }
-
-    def _commit():
-        _append_batch_files(
-            os.path.join(staging, "mentions", "data"),
-            os.path.join(kg_root, "mentions", "data"), tag)
-        _append_batch_files(
-            os.path.join(staging, "doc_terms", "data"),
-            os.path.join(kg_root, "doc_terms", "data"), tag)
-        _append_batch_files(
-            os.path.join(staging, "mention_triples", "data"),
-            live_mention_triples, tag)
-        _swap_subtree(
-            os.path.join(staging, "merged_cooccur", "data"), live_cooccur)
-
-        for stage in ("mentions", "doc_terms", "triples"):
-            prev = read_manifest(kg_root, stage)["input_fingerprint"]
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            commit_stage(kg_root, stage,
-                         input_fingerprint=combined, metrics=metrics)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    def _commit_iceberg():
-        # per-stage appends are individually idempotent by batch
-        # fingerprint; the two table commits inside the triples stage
-        # (append pred='mentions' rows, overwrite the co_occurs_with
-        # partition) get a local append marker so a crash between them
-        # replays without double-appending — the overwrite itself is
-        # replay-safe because merged_cooccur is a fingerprint-
-        # materialized staging snapshot, not a live recompute
-        append_stage_iceberg(
-            read_stage(spark, staging, "mentions"), spark, kg_root,
-            "mentions", batch_fp, metrics=metrics)
-        append_stage_iceberg(
-            read_stage(spark, staging, "doc_terms"), spark, kg_root,
-            "doc_terms", batch_fp, metrics=metrics)
-        tri_table = read_manifest(kg_root, "triples")["table"]
-        append_marker = os.path.join(
-            kg_root, "triples", f"_append-{tag}.done")
-        if not os.path.exists(append_marker):
-            (read_stage(spark, staging, "mention_triples")
-             .withColumn("pred", F.lit("mentions"))
-             .select("subj", "obj", "weight", "pred")
-             .writeTo(tri_table).append())
-            with open(append_marker, "w") as fh:
-                fh.write(batch_fp)
-        replace_stage_partitions_iceberg(
-            read_stage(spark, staging, "merged_cooccur")
-            .withColumn("pred", F.lit("co_occurs_with"))
-            .select("subj", "obj", "weight", "pred"),
-            spark, kg_root, "triples")
-        seal_stage_iceberg(spark, kg_root, "triples", batch_fp,
-                           metrics=metrics)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    timed("commit", _commit_iceberg if ice else _commit)
+    ops = [
+        CommitOp("append", "mentions", "mentions"),
+        CommitOp("append", "doc_terms", "doc_terms"),
+        CommitOp("append", "mention_triples", "triples",
+                 ("pred", "mentions")),
+        CommitOp("replace", "merged_cooccur", "triples",
+                 ("pred", "co_occurs_with")),
+    ]
+    timed("commit", lambda: finish_commit(
+        spark, kg_root, staging, ops, metrics, batch_fp=batch_fp))
 
     return {
         "status": "committed",
@@ -601,45 +489,6 @@ def read_live_triples(spark: SparkSession, kg_root: str) -> DataFrame:
     return t.where(F.col("pred") != "mentions").unionByName(mention_rows)
 
 
-def _rewrite_pred_partition_iceberg(
-    spark: SparkSession,
-    kg_root: str,
-    staging: str,
-    stage_name: str,
-    pred: str,
-    fp: str,
-) -> None:
-    """Replace ONE ``pred=`` branch of the table-backed triples stage
-    from a MATERIALIZED staging snapshot (columns subj/obj/weight),
-    handling the empty-content corner: ``overwritePartitions`` with an
-    empty df replaces NOTHING, so an emptied branch is explicitly
-    cleared — a metadata-only partition DELETE when the catalog
-    supports SQL table routing, else a staged whole-table rewrite
-    (materialized first, never reading the table it replaces)."""
-    n = read_manifest(staging, stage_name)["total_rows"]
-    tri_table = read_manifest(kg_root, "triples")["table"]
-    if n == 0:
-        try:
-            spark.sql(
-                f"DELETE FROM {tri_table} WHERE pred = '{pred}'"
-            )
-        except Exception:
-            keep = run_stage(
-                spark, staging, f"triples_keep_{stage_name}",
-                lambda: read_stage(spark, kg_root, "triples")
-                .where(F.col("pred") != pred),
-                input_fingerprint=fp,
-            )
-            (keep.writeTo(tri_table)
-             .partitionedBy(F.col("pred")).createOrReplace())
-        return
-    replace_stage_partitions_iceberg(
-        read_stage(spark, staging, stage_name)
-        .withColumn("pred", F.lit(pred))
-        .select("subj", "obj", "weight", "pred"),
-        spark, kg_root, "triples")
-
-
 def retract_batch(
     spark: SparkSession,
     kg_root: str,
@@ -679,27 +528,21 @@ def retract_batch(
     the PHYSICAL doc_terms stage, so a re-crawl of a retracted url does
     not re-enter (document-level history is append-only).
 
-    Works under BOTH stage backends (round 5): under an Iceberg
-    session catalog the delete-set rows APPEND
-    (``sinks.append_stage_iceberg``) and the negative-merged
-    co-occurrence branch lands via ``overwritePartitions`` exactly like
-    ``absorb_batch``'s positive merge — the retraction is the same
-    partition replacement with a negated delta."""
-    ice = iceberg_available(spark)
+    Works under both stage backends: the delete-set rows APPEND and
+    the negative-merged co-occurrence branch REPLACES its partition,
+    exactly like ``absorb_batch``'s positive merge — the retraction is
+    the same partition replacement with a negated delta."""
     t0 = time.time()
     tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
-    live_cooccur = os.path.join(
-        kg_root, "triples", "data", "pred=co_occurs_with")
-
-    if batch_already_committed(kg_root, batch_fp):
+    staging = begin_commit(kg_root, f"retract-{tag}", batch_fp,
+                           log_stage="triples")
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "batch_fingerprint": batch_fp,
             "sec": round(time.time() - t0, 2),
         }
 
-    if not ice:
-        _recover_swap(live_cooccur)
     _ensure_retracted_stage(spark, kg_root)
 
     (url_col,) = urls.columns
@@ -708,7 +551,6 @@ def retract_batch(
     if already is not None:
         urls = urls.join(already, "url", "left_anti")
 
-    staging = os.path.join(kg_root, "_staging", f"retract-{tag}")
     staged_urls = run_stage(
         spark, staging, "retracted", lambda: urls.coalesce(1),
         input_fingerprint=batch_fp,
@@ -723,18 +565,8 @@ def retract_batch(
     neg_edges = cooccurrence_edges_from_arrays(
         gone_terms, assume_deduped=True
     ).withColumn("weight", -F.col("weight"))
-    if ice:
-        old_edges = (
-            read_stage(spark, kg_root, "triples")
-            .where(F.col("pred") == "co_occurs_with")
-            .select(F.col("subj").alias("src"),
-                    F.col("obj").alias("dst"), "weight")
-        )
-    else:
-        old_edges = spark.read.parquet(live_cooccur).select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst"),
-            "weight"
-        )
+    old_edges = _pred_rows(spark, kg_root, "co_occurs_with").select(
+        F.col("subj").alias("src"), F.col("obj").alias("dst"), "weight")
     run_stage(
         spark, staging, "merged_cooccur",
         lambda: merge_cooccurrence_edges(old_edges, neg_edges)
@@ -753,38 +585,12 @@ def retract_batch(
         "retracted_docs": n_retracted,
     }
 
-    def _commit():
-        _append_batch_files(
-            os.path.join(staging, "retracted", "data"),
-            os.path.join(kg_root, "retracted", "data"), tag)
-        _swap_subtree(
-            os.path.join(staging, "merged_cooccur", "data"), live_cooccur)
-        for stage in ("retracted", "triples"):
-            prev = read_manifest(kg_root, stage)["input_fingerprint"]
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            # triples is sealed LAST — its snapshot log is the commit point
-            commit_stage(kg_root, stage,
-                         input_fingerprint=combined, metrics=metrics)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    def _commit_iceberg():
-        # delete-set append first (per-stage idempotent), then the
-        # negative-merged co-occur partition replacement + triples
-        # seal LAST = commit point; the overwrite is replay-safe
-        # because merged_cooccur is a fingerprint-materialized staging
-        # snapshot, not a live recompute
-        append_stage_iceberg(
-            read_stage(spark, staging, "retracted"), spark, kg_root,
-            "retracted", batch_fp, metrics=metrics)
-        _rewrite_pred_partition_iceberg(
-            spark, kg_root, staging, "merged_cooccur",
-            "co_occurs_with", batch_fp)
-        seal_stage_iceberg(spark, kg_root, "triples", batch_fp,
-                           metrics=metrics)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    _commit_iceberg() if ice else _commit()
+    # triples is sealed LAST — its snapshot log is the commit point
+    finish_commit(spark, kg_root, staging, [
+        CommitOp("append", "retracted", "retracted"),
+        CommitOp("replace", "merged_cooccur", "triples",
+                 ("pred", "co_occurs_with")),
+    ], metrics, batch_fp=batch_fp)
     return {
         "status": "committed",
         "batch_fingerprint": batch_fp,
@@ -818,32 +624,17 @@ def fold_retractions(spark: SparkSession, kg_root: str) -> dict:
     ``jobs/kg_update.py`` root where re-crawl suppression of retracted
     urls matters, keep the delete set unfolded.
 
-    Works under BOTH stage backends (round 5): under an Iceberg
-    session catalog each rewrite is a staged ``createOrReplace`` (the
-    url-keyed stages via ``write_stage`` keeping each stage's input
-    fingerprint — a content-identical maintenance rewrite, not a new
-    commit), the ``pred=mentions`` branch via ``overwritePartitions``
-    with the emptied-branch corner handled, and the delete-set clear
-    still lands LAST."""
-    ice = iceberg_available(spark)
-    import time as _time
-
-    t0 = _time.time()
+    Works under both stage backends: each rewrite is a staged
+    replacement (a directory swap, or a table ``createOrReplace`` /
+    ``overwritePartitions`` under an Iceberg session catalog)."""
+    t0 = time.time()
+    staging = begin_commit(kg_root, "fold_retractions")
     r = read_retracted(spark, kg_root)
     if r is None:
         return {"status": "noop_nothing_retracted",
-                "sec": round(_time.time() - t0, 2)}
+                "sec": round(time.time() - t0, 2)}
     n_retracted = r.count()
     masked = r.select(F.col("url").alias("subj"))
-    live_mention_triples = os.path.join(
-        kg_root, "triples", "data", "pred=mentions")
-    if not ice:
-        for sub in ("mentions", "doc_terms"):
-            _recover_swap(os.path.join(kg_root, sub, "data"))
-        _recover_swap(live_mention_triples)
-
-    staging = os.path.join(kg_root, "_staging", "fold_retractions")
-    shutil.rmtree(staging, ignore_errors=True)
     fold_fp = f"fold-{n_retracted}"
     rows_before: dict[str, int] = {}
     url_stages = ["mentions", "doc_terms"]
@@ -852,11 +643,7 @@ def fold_retractions(spark: SparkSession, kg_root: str) -> dict:
         # (updated after ingestion, demoted later) — fold it out of the
         # overlay pair too, or clearing the delete set would resurrect it
         url_stages += ["mentions_overlay", "doc_terms_overlay"]
-    fold_metrics = {"fold_retractions": {"urls_folded": n_retracted}}
     for stage in url_stages:
-        live = os.path.join(kg_root, stage, "data")
-        if not ice:
-            _recover_swap(live)
         rows_before[stage] = read_manifest(kg_root, stage)["total_rows"]
         run_stage(
             spark, staging, stage,
@@ -864,74 +651,29 @@ def fold_retractions(spark: SparkSession, kg_root: str) -> dict:
             .join(r, "url", "left_anti"),
             input_fingerprint=fold_fp,
         )
-        if ice:
-            man = read_manifest(kg_root, stage)
-            write_stage(
-                read_stage(spark, staging, stage), kg_root, stage,
-                input_fingerprint=man["input_fingerprint"],
-                metrics={**(man.get("metrics") or {}), **fold_metrics},
-            )
-            drop_stage_table(spark, staging, stage)
-        else:
-            _swap_subtree(os.path.join(staging, stage, "data"), live)
-    mt = (
-        read_stage(spark, kg_root, "triples")
-        .where(F.col("pred") == "mentions")
-        .select("subj", "obj", "weight")
-        if ice else spark.read.parquet(live_mention_triples)
-    )
     run_stage(
         spark, staging, "mention_triples",
-        lambda: mt.join(masked, "subj", "left_anti"),
+        lambda: _pred_rows(spark, kg_root, "mentions")
+        .join(masked, "subj", "left_anti"),
         input_fingerprint=fold_fp,
     )
-    if ice:
-        _rewrite_pred_partition_iceberg(
-            spark, kg_root, staging, "mention_triples", "mentions",
-            fold_fp)
-        man = read_manifest(kg_root, "triples")
-        seal_stage_iceberg(
-            spark, kg_root, "triples", fold_fp,
-            metrics={**(man.get("metrics") or {}), **fold_metrics},
-            keep_fingerprint=True,
-        )
-    else:
-        _swap_subtree(
-            os.path.join(staging, "mention_triples", "data"),
-            live_mention_triples)
-
-    # clear the delete set LAST (the fold's commit point)
-    empty = spark.createDataFrame([], "url string").repartition(1)
-    if ice:
-        man = read_manifest(kg_root, "retracted")
-        write_stage(
-            empty, kg_root, "retracted",
-            input_fingerprint=man["input_fingerprint"],
-            metrics={**(man.get("metrics") or {}), **fold_metrics},
-        )
-    else:
-        run_stage(spark, staging, "retracted", lambda: empty,
-                  input_fingerprint=fold_fp)
-        _swap_subtree(
-            os.path.join(staging, "retracted", "data"),
-            os.path.join(kg_root, "retracted", "data"))
-
-        for stage in (*url_stages, "triples", "retracted"):
-            man = read_manifest(kg_root, stage)
-            commit_stage(
-                kg_root, stage,
-                input_fingerprint=man["input_fingerprint"],
-                metrics={
-                    **(man.get("metrics") or {}),
-                    **fold_metrics,
-                },
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    run_stage(
+        spark, staging, "retracted",
+        lambda: spark.createDataFrame([], "url string").repartition(1),
+        input_fingerprint=fold_fp,
+    )
+    finish_commit(spark, kg_root, staging, [
+        *(CommitOp("replace", stage, stage) for stage in url_stages),
+        CommitOp("replace", "mention_triples", "triples",
+                 ("pred", "mentions")),
+        # clear the delete set LAST (the fold's commit point)
+        CommitOp("replace", "retracted", "retracted"),
+    ], metrics={"fold_retractions": {"urls_folded": n_retracted}})
     return {
         "status": "folded",
         "n_urls_folded": n_retracted,
         "rows_before": rows_before,
-        "sec": round(_time.time() - t0, 2),
+        "sec": round(time.time() - t0, 2),
     }
 
 
@@ -973,28 +715,17 @@ def fold_dict_overlay(spark: SparkSession, kg_root: str) -> dict:
     O(corpus) — the deferred rewrite cost, paid once at maintenance
     time and amortized over every release absorbed since the last
     fold, instead of once per release."""
-    ice = iceberg_available(spark)
     from onto_text_tag_spark.schemas import MENTIONS
 
     t0 = time.time()
+    staging = begin_commit(kg_root, "fold_dict_overlay")
     ov = read_dict_overlay(spark, kg_root)
     if ov is None:
         return {"status": "noop_no_overlay",
                 "sec": round(time.time() - t0, 2)}
     _ov_m, ov_dt = ov
     n_urls = ov_dt.count()
-    live_mention_triples = os.path.join(
-        kg_root, "triples", "data", "pred=mentions")
-    if not ice:
-        for sub in ("mentions", "doc_terms",
-                    "mentions_overlay", "doc_terms_overlay"):
-            _recover_swap(os.path.join(kg_root, sub, "data"))
-        _recover_swap(live_mention_triples)
-
-    staging = os.path.join(kg_root, "_staging", "fold_dict_overlay")
-    shutil.rmtree(staging, ignore_errors=True)
     fp = f"fold-overlay-{n_urls}"
-    fold_metrics = {"fold_dict_overlay": {"urls_folded": n_urls}}
     run_stage(
         spark, staging, "mentions",
         lambda: mentions_with_overlay(spark, kg_root),
@@ -1006,15 +737,9 @@ def fold_dict_overlay(spark: SparkSession, kg_root: str) -> dict:
         input_fingerprint=fp,
     )
     mask = ov_dt.select(F.col("url").alias("subj"))
-    base_mt = (
-        read_stage(spark, kg_root, "triples")
-        .where(F.col("pred") == "mentions")
-        .select("subj", "obj", "weight")
-        if ice else spark.read.parquet(live_mention_triples)
-    )
     run_stage(
         spark, staging, "mention_triples",
-        lambda: base_mt
+        lambda: _pred_rows(spark, kg_root, "mentions")
         .join(mask, "subj", "left_anti")
         .unionByName(ov_dt.select(
             F.col("url").alias("subj"),
@@ -1023,52 +748,6 @@ def fold_dict_overlay(spark: SparkSession, kg_root: str) -> dict:
         )),
         input_fingerprint=fp,
     )
-    if ice:
-        # rewrites keep each stage's input fingerprint (maintenance,
-        # not a new commit); overlay truncation lands LAST
-        for stage in ("mentions", "doc_terms"):
-            man = read_manifest(kg_root, stage)
-            write_stage(
-                read_stage(spark, staging, stage), kg_root, stage,
-                input_fingerprint=man["input_fingerprint"],
-                metrics={**(man.get("metrics") or {}), **fold_metrics},
-            )
-            drop_stage_table(spark, staging, stage)
-        _rewrite_pred_partition_iceberg(
-            spark, kg_root, staging, "mention_triples", "mentions", fp)
-        man = read_manifest(kg_root, "triples")
-        seal_stage_iceberg(
-            spark, kg_root, "triples", fp,
-            metrics={**(man.get("metrics") or {}), **fold_metrics},
-            keep_fingerprint=True,
-        )
-        for stage, empty in (
-            ("mentions_overlay",
-             spark.createDataFrame([], MENTIONS).repartition(1)),
-            ("doc_terms_overlay",
-             spark.createDataFrame(
-                 [], "url string, _terms array<string>").repartition(1)),
-        ):
-            man = read_manifest(kg_root, stage)
-            write_stage(
-                empty, kg_root, stage,
-                input_fingerprint=man["input_fingerprint"],
-                metrics={**(man.get("metrics") or {}), **fold_metrics},
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-        return {
-            "status": "folded",
-            "n_urls_folded": n_urls,
-            "sec": round(time.time() - t0, 2),
-        }
-    _swap_subtree(os.path.join(staging, "mentions", "data"),
-                  os.path.join(kg_root, "mentions", "data"))
-    _swap_subtree(os.path.join(staging, "doc_terms", "data"),
-                  os.path.join(kg_root, "doc_terms", "data"))
-    _swap_subtree(os.path.join(staging, "mention_triples", "data"),
-                  live_mention_triples)
-
-    # truncate the overlay LAST (the fold's commit point)
     run_stage(
         spark, staging, "mentions_overlay",
         lambda: spark.createDataFrame([], MENTIONS).repartition(1),
@@ -1080,23 +759,15 @@ def fold_dict_overlay(spark: SparkSession, kg_root: str) -> dict:
             [], "url string, _terms array<string>").repartition(1),
         input_fingerprint=fp,
     )
-    _swap_subtree(os.path.join(staging, "mentions_overlay", "data"),
-                  os.path.join(kg_root, "mentions_overlay", "data"))
-    _swap_subtree(os.path.join(staging, "doc_terms_overlay", "data"),
-                  os.path.join(kg_root, "doc_terms_overlay", "data"))
-
-    for stage in ("mentions", "doc_terms", "triples",
-                  "mentions_overlay", "doc_terms_overlay"):
-        man = read_manifest(kg_root, stage)
-        commit_stage(
-            kg_root, stage,
-            input_fingerprint=man["input_fingerprint"],
-            metrics={
-                **(man.get("metrics") or {}),
-                **fold_metrics,
-            },
-        )
-    shutil.rmtree(staging, ignore_errors=True)
+    finish_commit(spark, kg_root, staging, [
+        CommitOp("replace", "mentions", "mentions"),
+        CommitOp("replace", "doc_terms", "doc_terms"),
+        CommitOp("replace", "mention_triples", "triples",
+                 ("pred", "mentions")),
+        # truncate the overlay LAST (the fold's commit point)
+        CommitOp("replace", "mentions_overlay", "mentions_overlay"),
+        CommitOp("replace", "doc_terms_overlay", "doc_terms_overlay"),
+    ], metrics={"fold_dict_overlay": {"urls_folded": n_urls}})
     return {
         "status": "folded",
         "n_urls_folded": n_urls,
@@ -1126,16 +797,12 @@ def refresh_nodes(
     comes FROM the live stage, so the rewrite must fully materialize
     before replacing it).
 
-    Works under BOTH stage backends (round 5): under an Iceberg
-    session catalog the rewrite lands via ``write_stage`` (atomic
-    ``createOrReplace`` sealed with the refresh fingerprint — the
-    fingerprint is a pure function of the inputs, not a chained batch
-    log, so ``replace_stage_iceberg`` is NOT the right primitive
-    here), still from the materialized staging snapshot."""
-    ice = iceberg_available(spark)
+    The seal records the refresh fingerprint itself — a pure function
+    of the inputs, not a chained batch log — on either stage backend."""
     from onto_text_tag_spark.plans.kg_pipeline import node_table
 
     t0 = time.time()
+    staging = begin_commit(kg_root, "refresh_nodes")
     dt_fp = read_manifest(kg_root, "doc_terms")["input_fingerprint"]
     try:
         r_fp = read_manifest(kg_root, "retracted")["input_fingerprint"]
@@ -1143,16 +810,11 @@ def refresh_nodes(
         r_fp = ""
     fp = hashlib.md5(f"nodes:{dt_fp}+{r_fp}".encode()).hexdigest()
 
-    live = os.path.join(kg_root, "nodes", "data")
-    if ice:
-        try:
-            read_manifest(kg_root, "nodes")
-            have_stage = True
-        except OSError:
-            have_stage = False
-    else:
-        _recover_swap(live)
-        have_stage = os.path.exists(live)
+    try:
+        read_manifest(kg_root, "nodes")
+        have_stage = True
+    except OSError:
+        have_stage = False
     if have_stage and stage_is_current(kg_root, "nodes", fp):
         return {"status": "noop_already_current",
                 "sec": round(time.time() - t0, 2)}
@@ -1171,30 +833,17 @@ def refresh_nodes(
             "to bootstrap it"
         )
 
-    staging = os.path.join(kg_root, "_staging", "refresh_nodes")
-    shutil.rmtree(staging, ignore_errors=True)
-    nodes = run_stage(
+    run_stage(
         spark, staging, "nodes",
         lambda: node_table(read_live_doc_terms(spark, kg_root), meta),
         partition_by=["kind"],
         input_fingerprint=fp,
     )
     n_nodes = read_manifest(staging, "nodes")["total_rows"]
-    if ice:
-        man = write_stage(
-            read_stage(spark, staging, "nodes"), kg_root, "nodes",
-            partition_by=["kind"], input_fingerprint=fp,
-            metrics={"refresh_nodes": {"n_nodes": n_nodes}},
-        )
-        drop_stage_table(spark, staging, "nodes")
-    else:
-        _swap_subtree(os.path.join(staging, "nodes", "data"), live)
-        man = commit_stage(
-            kg_root, "nodes", partition_by=["kind"], input_fingerprint=fp,
-            metrics={"refresh_nodes": {"n_nodes": n_nodes}},
-            schema_json=nodes.schema.jsonValue(),
-        )
-    shutil.rmtree(staging, ignore_errors=True)
+    man = finish_commit(
+        spark, kg_root, staging, [CommitOp("replace", "nodes", "nodes")],
+        metrics={"refresh_nodes": {"n_nodes": n_nodes}}, fingerprint=fp,
+    )
     return {
         "status": "refreshed",
         "n_nodes": man["total_rows"],
@@ -1223,36 +872,19 @@ def compact_stage(
     require_file_backed_stages(spark, "compact_stage")
     import math
 
+    staging = begin_commit(kg_root, f"compact_{stage}")
     man = read_manifest(kg_root, stage)
-    partition_by = man.get("partition_by") or []
     n_target = max(1, math.ceil(man["size_bytes"] / target_bytes_per_file))
-
-    staged = os.path.join(kg_root, "_staging", f"compact_{stage}", "data")
-    shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
-    df = read_stage(spark, kg_root, stage).repartition(n_target)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staged)
-
-    n_after = sum(
-        1 for _dir, _s, files in os.walk(staged)
-        for f in files if f.endswith(".parquet")
+    write_stage(
+        read_stage(spark, kg_root, stage).repartition(n_target),
+        staging, stage, partition_by=man.get("partition_by") or [],
     )
-    live = os.path.join(kg_root, stage, "data")
-    _recover_swap(live)
-    _swap_subtree(staged, live)
-    shutil.rmtree(os.path.dirname(staged), ignore_errors=True)
-    return commit_stage(
-        kg_root, stage,
-        input_fingerprint=man["input_fingerprint"],
-        metrics={
-            **(man.get("metrics") or {}),
-            "compaction": {
-                "files_before": man["n_files"],
-                "files_after": n_after,
-            },
-        },
+    return finish_commit(
+        spark, kg_root, staging, [CommitOp("replace", stage, stage)],
+        metrics={"compaction": {
+            "files_before": man["n_files"],
+            "files_after": read_manifest(staging, stage)["n_files"],
+        }},
     )
 
 
@@ -1272,19 +904,10 @@ def absorb_links(
       disjoint url sets, so it merges exactly like the co-occurrence
       edges (one host-pair-keyed shuffle, ≪ corpus);
     * epoch fingerprints in the links snapshot log make a replayed
-      batch a committed no-op; the interrupted-swap recovery protocol
-      is shared with the co-occurrence stage.
+      batch a committed no-op (the links seal is the commit point).
 
     Stages are lazily bootstrapped on roots built before ``--links``.
-
-    Works under BOTH stage backends (round 5): under an Iceberg
-    session catalog the link facts APPEND (``append_stage_iceberg``)
-    and the merged host graph — a pair-keyed weight sum — lands via
-    ``replace_stage_iceberg`` from the materialized staging snapshot;
-    the links append is LAST, matching the replay check on the links
-    snapshot log.
     """
-    ice = iceberg_available(spark)
     from onto_text_tag_spark.operators.weblinks import (
         extract_links,
         host_graph,
@@ -1292,7 +915,6 @@ def absorb_links(
 
     t0 = time.time()
     tag = hashlib.md5(("links:" + batch_fp).encode()).hexdigest()[:12]
-    live_hosts = os.path.join(kg_root, "host_graph", "data")
 
     try:
         read_manifest(kg_root, "links")
@@ -1310,18 +932,13 @@ def absorb_links(
             kg_root, "host_graph", input_fingerprint="init",
         )
 
-    if any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(kg_root, "links")
-    ):
+    staging = begin_commit(kg_root, tag, batch_fp, log_stage="links")
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "n_links_total": read_manifest(kg_root, "links")["total_rows"],
             "sec": round(time.time() - t0, 2),
         }
-
-    if not ice:
-        _recover_swap(live_hosts)
 
     id_col = "url" if "url" in docs.columns else "doc_id"
     seen = read_stage(spark, kg_root, "links").select(
@@ -1329,14 +946,12 @@ def absorb_links(
     ).distinct()
     new_docs = docs.join(seen, id_col, "left_anti")
 
-    staging = os.path.join(kg_root, "_staging", tag)
     delta_links = run_stage(
         spark, staging, "links_delta",
         lambda: extract_links(new_docs, url_col=id_col, html_col="html"),
         input_fingerprint=batch_fp,
     )
-    old_hosts = (read_stage(spark, kg_root, "host_graph") if ice
-                 else spark.read.parquet(live_hosts))
+    old_hosts = read_stage(spark, kg_root, "host_graph")
     run_stage(
         spark, staging, "merged_hosts",
         lambda: (
@@ -1349,30 +964,10 @@ def absorb_links(
     n_new_links = read_manifest(staging, "links_delta")["total_rows"]
 
     metrics = {"batch_fingerprint": batch_fp, "batch_links": n_new_links}
-    if ice:
-        # host-graph replace first, links append LAST = commit point
-        # (the replay check reads the links snapshot log)
-        replace_stage_iceberg(
-            read_stage(spark, staging, "merged_hosts"), spark, kg_root,
-            "host_graph", batch_fp, metrics=metrics)
-        append_stage_iceberg(
-            read_stage(spark, staging, "links_delta"), spark, kg_root,
-            "links", batch_fp, metrics=metrics)
-        for st in ("links_delta", "merged_hosts"):
-            drop_stage_table(spark, staging, st)
-    else:
-        _append_batch_files(
-            os.path.join(staging, "links_delta", "data"),
-            os.path.join(kg_root, "links", "data"), tag)
-        _swap_subtree(os.path.join(staging, "merged_hosts", "data"),
-                      live_hosts)
-        for stage in ("links", "host_graph"):
-            prev = read_manifest(kg_root, stage)["input_fingerprint"]
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            commit_stage(kg_root, stage,
-                         input_fingerprint=combined, metrics=metrics)
-    shutil.rmtree(staging, ignore_errors=True)
+    finish_commit(spark, kg_root, staging, [
+        CommitOp("replace", "merged_hosts", "host_graph"),
+        CommitOp("append", "links_delta", "links"),
+    ], metrics, batch_fp=batch_fp)
 
     return {
         "status": "committed",
@@ -1417,12 +1012,9 @@ def absorb_term_sketch(
     ``mentions``: the BATCH's mention rows (url, curie) — typically the
     delta the surrounding absorb just computed.
 
-    Works under BOTH stage backends (round 5): the merged sketch — a
-    keyed replace — lands via ``replace_stage_iceberg`` under an
-    Iceberg session catalog; the exact catch-up fold works unchanged
-    (it reads the mentions STAGE, not batch-tagged files).
+    Works under both stage backends: the catch-up fold reads the
+    mentions STAGE, not batch-tagged files.
     """
-    ice = iceberg_available(spark)
     from onto_text_tag_spark.operators.cooccur import (
         merge_term_sketches,
         term_sketch_partials,
@@ -1430,7 +1022,6 @@ def absorb_term_sketch(
 
     t0 = time.time()
     tag = hashlib.md5(("sketch:" + batch_fp).encode()).hexdigest()[:12]
-    live = os.path.join(kg_root, "term_sketch", "data")
 
     initialized_now = False
     try:
@@ -1467,11 +1058,8 @@ def absorb_term_sketch(
     n_stored_mentions = read_manifest(kg_root, "mentions")["total_rows"]
     fold_full = bool(missing) or (initialized_now and n_stored_mentions > 0)
 
-    if not ice:
-        _recover_swap(live)
-    stored = (read_stage(spark, kg_root, "term_sketch") if ice
-              else spark.read.parquet(live))
-    staging = os.path.join(kg_root, "_staging", tag)
+    staging = begin_commit(kg_root, tag, batch_fp)
+    stored = read_stage(spark, kg_root, "term_sketch")
 
     def _merged():
         delta = term_sketch_partials(mentions, k=k)
@@ -1495,21 +1083,9 @@ def absorb_term_sketch(
     if fold_full:
         metrics["caught_up_batches"] = sorted(missing)
         metrics["caught_up_mentions"] = n_stored_mentions
-    if ice:
-        replace_stage_iceberg(
-            read_stage(spark, staging, "merged_sketch"), spark, kg_root,
-            "term_sketch", batch_fp, metrics=metrics)
-        drop_stage_table(spark, staging, "merged_sketch")
-    else:
-        _swap_subtree(os.path.join(staging, "merged_sketch", "data"),
-                      live)
-        prev = read_manifest(kg_root, "term_sketch")["input_fingerprint"]
-        combined = hashlib.md5(f"{prev}+{batch_fp}".encode()).hexdigest()
-        commit_stage(
-            kg_root, "term_sketch", input_fingerprint=combined,
-            metrics=metrics,
-        )
-    shutil.rmtree(staging, ignore_errors=True)
+    finish_commit(spark, kg_root, staging,
+                  [CommitOp("replace", "merged_sketch", "term_sketch")],
+                  metrics, batch_fp=batch_fp)
     return {
         "status": "committed",
         "n_terms": read_manifest(kg_root, "term_sketch")["total_rows"],
@@ -1553,14 +1129,11 @@ def absorb_trends(
     ``mentions``: the batch's mention rows; ``docs``: the batch's
     corpus rows carrying ``warc_ts`` (joined on url for bucketing).
 
-    Works under BOTH stage backends (round 5): the merged series — a
-    keyed replace — lands via ``replace_stage_iceberg`` under an
-    Iceberg session catalog.  Table-backed stages carry no
+    Works under both stage backends.  Table-backed stages carry no
     batch-tagged files, so the replay BACK-FILL of a main-committed
     batch is only possible for legitimately-empty batches — a
     non-empty gap warns exactly like the compacted-files case.
     """
-    ice = iceberg_available(spark)
     import warnings
 
     from pyspark.sql import Window
@@ -1569,7 +1142,6 @@ def absorb_trends(
 
     t0 = time.time()
     tag = hashlib.md5(("trends:" + batch_fp).encode()).hexdigest()[:12]
-    live = os.path.join(kg_root, "trends", "data")
 
     initialized_now = False
     try:
@@ -1628,19 +1200,16 @@ def absorb_trends(
                 stacklevel=2,
             )
 
-    if not ice:
-        _recover_swap(live)
+    staging = begin_commit(kg_root, tag, batch_fp)
     id_col = "url" if "url" in docs.columns else "doc_id"
     delta = mention_trends(
         mentions,
         docs.select(F.col(id_col).cast("string").alias("url"), "warc_ts"),
         bucket=bucket,
     ).select("curie", "bucket", "n_docs")
-    stored = (read_stage(spark, kg_root, "trends") if ice
-              else spark.read.parquet(live)).select(
+    stored = read_stage(spark, kg_root, "trends").select(
         "curie", "bucket", "n_docs")
     w = Window.partitionBy("curie").orderBy("bucket")
-    staging = os.path.join(kg_root, "_staging", tag)
     run_stage(
         spark, staging, "merged_trends",
         lambda: (
@@ -1659,21 +1228,9 @@ def absorb_trends(
     )
     trend_metrics = {"batch_fingerprint": batch_fp, "bucket": bucket,
                      **caveats}
-    if ice:
-        replace_stage_iceberg(
-            read_stage(spark, staging, "merged_trends"), spark, kg_root,
-            "trends", batch_fp, metrics=trend_metrics)
-        drop_stage_table(spark, staging, "merged_trends")
-    else:
-        _swap_subtree(os.path.join(staging, "merged_trends", "data"),
-                      live)
-        prev = read_manifest(kg_root, "trends")["input_fingerprint"]
-        combined = hashlib.md5(f"{prev}+{batch_fp}".encode()).hexdigest()
-        commit_stage(
-            kg_root, "trends", input_fingerprint=combined,
-            metrics=trend_metrics,
-        )
-    shutil.rmtree(staging, ignore_errors=True)
+    finish_commit(spark, kg_root, staging,
+                  [CommitOp("replace", "merged_trends", "trends")],
+                  trend_metrics, batch_fp=batch_fp)
     return {
         "status": "committed",
         "n_series_rows": read_manifest(kg_root, "trends")["total_rows"],

@@ -50,7 +50,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -62,18 +61,18 @@ from onto_text_tag_spark.operators.cooccur import (
 )
 from onto_text_tag_spark.operators.tagger import tag_documents
 from onto_text_tag_spark.plans.kg_absorb import (
-    _recover_swap,
-    _swap_subtree,
-    batch_already_committed,
     ensure_dict_overlay_stages,
     read_live_doc_terms,
     read_retracted,
 )
 from onto_text_tag_spark.plans.kg_pipeline import extract_texts
 from onto_text_tag_spark.sinks import (
-    commit_stage,
+    CommitOp,
+    begin_commit,
+    finish_commit,
     read_manifest,
     read_stage,
+    require_file_backed_stages,
     run_stage,
 )
 
@@ -128,7 +127,11 @@ def update_dictionary(
     release since the last fold).  The co-occurrence aggregate is still
     physically merged either way — an aggregate cannot be masked
     row-wise.  Live-view equality with the eager path and with a
-    from-scratch rebuild is pinned by tests/test_dict_update.py."""
+    from-scratch rebuild is pinned by tests/test_dict_update.py.
+
+    File-backed roots only: the update reads live stages by parquet
+    path, so it refuses up front under an Iceberg session catalog."""
+    require_file_backed_stages(spark, "update_dictionary")
     t0 = time.time()
     stage_sec: dict[str, float] = {}
 
@@ -140,21 +143,9 @@ def update_dictionary(
 
     tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
     live_triples = os.path.join(kg_root, "triples", "data")
-    if defer_rewrite:
-        swap_targets = [
-            os.path.join(kg_root, "mentions_overlay", "data"),
-            os.path.join(kg_root, "doc_terms_overlay", "data"),
-            os.path.join(live_triples, "pred=co_occurs_with"),
-        ]
-    else:
-        swap_targets = [
-            os.path.join(kg_root, "mentions", "data"),
-            os.path.join(kg_root, "doc_terms", "data"),
-            os.path.join(live_triples, "pred=mentions"),
-            os.path.join(live_triples, "pred=co_occurs_with"),
-        ]
-
-    if batch_already_committed(kg_root, batch_fp):
+    staging = begin_commit(kg_root, f"dict-{tag}", batch_fp,
+                           log_stage="triples")
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "batch_fingerprint": batch_fp,
@@ -162,8 +153,6 @@ def update_dictionary(
         }
     if defer_rewrite:
         ensure_dict_overlay_stages(spark, kg_root)
-    for target in swap_targets:
-        _recover_swap(target)
 
     if not defer_rewrite:
         # an EAGER rewrite reads the physical url-keyed stages; a
@@ -192,7 +181,6 @@ def update_dictionary(
         docs = docs.join(gone.select(F.col("url").alias(id_col)),
                          id_col, "left_anti")
 
-    staging = os.path.join(kg_root, "_staging", f"dict-{tag}")
     # the LIVE view, not the physical stage: on a root with doc
     # retractions (crawl-sink demotions) the physical doc_terms still
     # carries the retracted urls' rows, but the co-occurrence aggregate
@@ -299,11 +287,15 @@ def update_dictionary(
             ),
             input_fingerprint=batch_fp,
         ))
-        swap_stages = [
-            ("doc_terms_overlay", swap_targets[1]),
-            ("mentions_overlay", swap_targets[0]),
-            ("merged_cooccur", swap_targets[2]),
+        ops = [
+            CommitOp("replace", "doc_terms_overlay", "doc_terms_overlay"),
+            CommitOp("replace", "mentions_overlay", "mentions_overlay"),
         ]
+        # base stages are sealed too: their PHYSICAL rows are untouched
+        # but their logical content changed (the overlay masks them), so
+        # a resume keyed on the old fingerprint must miss
+        seal = ["mentions", "doc_terms", "mentions_overlay",
+                "doc_terms_overlay", "triples"]
     else:
         # --- copy-on-write: rewrite the url-keyed stages ------------------
         timed("rewrite_mentions", lambda: run_stage(
@@ -332,43 +324,29 @@ def update_dictionary(
             )),
             input_fingerprint=batch_fp,
         ))
-        swap_stages = [
-            ("mentions", swap_targets[0]),
-            ("doc_terms", swap_targets[1]),
-            ("mention_triples", swap_targets[2]),
-            ("merged_cooccur", swap_targets[3]),
+        ops = [
+            CommitOp("replace", "mentions", "mentions"),
+            CommitOp("replace", "doc_terms", "doc_terms"),
+            CommitOp("replace", "mention_triples", "triples",
+                     ("pred", "mentions")),
         ]
+        seal = None
+    ops.append(CommitOp("replace", "merged_cooccur", "triples",
+                        ("pred", "co_occurs_with")))
     n_affected = read_manifest(staging, "affected")["total_rows"]
-
-    def _commit():
-        for stage, target in swap_stages:
-            _swap_subtree(os.path.join(staging, stage, "data"), target)
-        metrics = {
-            "batch_fingerprint": batch_fp,
-            "dict_update": {
-                "affected_docs": n_affected,
-                "added_surfaces": len(delta["added_rows"]),
-                "shrunk_curies": len(delta["shrunk_curies"]),
-                "deferred": defer_rewrite,
-            },
-        }
-        seal = ["mentions", "doc_terms"]
-        if defer_rewrite:
-            # base stages are sealed too: their PHYSICAL rows are
-            # untouched but their logical content changed (the overlay
-            # masks them), so a resume keyed on the old fingerprint
-            # must miss
-            seal += ["mentions_overlay", "doc_terms_overlay"]
-        for stage in (*seal, "triples"):
-            prev = read_manifest(kg_root, stage)["input_fingerprint"]
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            # triples sealed LAST — its snapshot log is the commit point
-            commit_stage(kg_root, stage,
-                         input_fingerprint=combined, metrics=metrics)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    timed("commit", _commit)
+    metrics = {
+        "batch_fingerprint": batch_fp,
+        "dict_update": {
+            "affected_docs": n_affected,
+            "added_surfaces": len(delta["added_rows"]),
+            "shrunk_curies": len(delta["shrunk_curies"]),
+            "deferred": defer_rewrite,
+        },
+    }
+    # triples sealed LAST — its snapshot log is the commit point
+    timed("commit", lambda: finish_commit(
+        spark, kg_root, staging, ops, metrics, batch_fp=batch_fp,
+        seal=seal))
     return {
         "status": "committed",
         "batch_fingerprint": batch_fp,
@@ -393,28 +371,27 @@ def update_ontology(
     rows (driver-side small data — the reference parses ontologies on
     the driver too) and land both via the staged swap.  No corpus
     interaction: the ontology graph is corpus-independent.  Pair with
-    ``update_dictionary`` for the tagging side of a release."""
+    ``update_dictionary`` for the tagging side of a release.
+    File-backed roots only, like ``update_dictionary``."""
     from onto_text_tag_spark.operators.closure import (
         transitive_closure_rows,
     )
     from onto_text_tag_spark.session import local_df
 
+    require_file_backed_stages(spark, "update_ontology")
     t0 = time.time()
-    if batch_already_committed(kg_root, batch_fp):
+    tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
+    staging = begin_commit(kg_root, f"onto-{tag}", batch_fp,
+                           log_stage="triples")
+    if staging is None:
         return {"status": "noop_already_committed",
                 "batch_fingerprint": batch_fp,
                 "sec": round(time.time() - t0, 2)}
-    live_isa = os.path.join(kg_root, "triples", "data", "pred=is_a")
-    live_closure = os.path.join(kg_root, "isa_closure", "data")
-    _recover_swap(live_isa)
-    _recover_swap(live_closure)
 
     isa_pairs = [
         (r["curie"], r["parent_curie"])
         for r in onto_rows if r.get("parent_curie")
     ]
-    tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
-    staging = os.path.join(kg_root, "_staging", f"onto-{tag}")
     run_stage(
         spark, staging, "is_a",
         lambda: local_df(
@@ -433,17 +410,12 @@ def update_ontology(
         ).coalesce(1),
         input_fingerprint=batch_fp,
     )
-    _swap_subtree(os.path.join(staging, "is_a", "data"), live_isa)
-    _swap_subtree(os.path.join(staging, "isa_closure", "data"),
-                  live_closure)
-    metrics = {"batch_fingerprint": batch_fp,
-               "ontology_update": {"is_a_edges": len(isa_pairs)}}
-    for stage in ("isa_closure", "triples"):
-        prev = read_manifest(kg_root, stage)["input_fingerprint"]
-        combined = hashlib.md5(f"{prev}+{batch_fp}".encode()).hexdigest()
-        commit_stage(kg_root, stage,
-                     input_fingerprint=combined, metrics=metrics)
-    shutil.rmtree(staging, ignore_errors=True)
+    finish_commit(spark, kg_root, staging, [
+        CommitOp("replace", "isa_closure", "isa_closure"),
+        CommitOp("replace", "is_a", "triples", ("pred", "is_a")),
+    ], {"batch_fingerprint": batch_fp,
+        "ontology_update": {"is_a_edges": len(isa_pairs)}},
+        batch_fp=batch_fp)
     return {"status": "committed", "batch_fingerprint": batch_fp,
             "n_is_a_edges": len(isa_pairs),
             "sec": round(time.time() - t0, 2)}

@@ -24,34 +24,29 @@ crawl ids arrive — absorbing batches A then B yields exactly
 ``paragraph_dedup(A ∪ B)``: the batch operator's corpus-wide
 first-(doc, position)-occurrence rule IS the arrival order rule.
 
-Commit protocol mirrors ``plans/dedup_absorb.py`` (single writer per
-root, crash-safe, idempotent): stage delta snapshots under
-``<root>/_staging/``, file-append into the live stages under
-deterministic batch-prefixed names (re-runs skip landed files), seal
-every touched stage via ``sinks.commit_stage`` with ``deduped`` LAST —
-its snapshot log is the commit point, so a batch whose fingerprint is
-already there is a committed no-op.
+Commit protocol: the ``sinks.begin_commit`` / ``finish_commit`` staged
+commit (single writer per root, crash-safe, idempotent) — delta
+snapshots staged under ``<root>/_staging/``, appended into the live
+stages with ``deduped`` sealed LAST: its snapshot log is the commit
+point, so a batch whose fingerprint is already there is a committed
+no-op.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from onto_text_tag_spark.operators.dedup import content_digest
-from onto_text_tag_spark.plans.kg_absorb import _append_batch_files
 from onto_text_tag_spark.sinks import (
-    append_stage_iceberg,
-    commit_stage,
-    iceberg_available,
+    CommitOp,
+    begin_commit,
+    finish_commit,
     read_manifest,
     read_stage,
     run_stage,
-    snapshot_log,
     write_stage,
 )
 
@@ -84,13 +79,6 @@ def init_paragraph_root(
         )
 
 
-def paragraph_batch_already_committed(root: str, batch_fp: str) -> bool:
-    return any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(root, "deduped")
-    )
-
-
 def read_para_deduped(spark: SparkSession, root: str) -> DataFrame:
     """The live paragraph-deduped corpus (append-grown)."""
     return read_stage(spark, root, "deduped")
@@ -107,27 +95,18 @@ def absorb_paragraph_batch(
     """Commit one delta batch into paragraph-dedup root ``root``
     (stage → append → seal).  Returns batch metrics; an
     already-committed fingerprint returns a no-op marker without
-    touching the store.
-
-    Works under BOTH stage backends: file-backed roots commit via
-    ``_append_batch_files`` + ``commit_stage``; under an Iceberg
-    session catalog the same staged snapshots commit via
-    ``sinks.append_stage_iceberg`` (one atomic table append per stage,
-    per-stage fingerprint idempotency) — this path is append-only, so
-    it needs no ``_swap_subtree`` analog.  It is the proving slice of
-    the table-level incremental protocol: the kg_update mention
-    append commits are the same shape (the co-occurrence weight swap
-    is the remaining file-backed-only piece)."""
+    touching the store.  Works under both stage backends: both stages
+    are append-only."""
     t0 = time.time()
-    if paragraph_batch_already_committed(root, batch_fp):
+    tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
+    staging = begin_commit(root, f"para-{tag}", batch_fp,
+                           log_stage="deduped")
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "batch_fingerprint": batch_fp,
             "sec": round(time.time() - t0, 2),
         }
-
-    tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12]
-    staging = os.path.join(root, "_staging", f"para-{tag}")
 
     paras = (
         delta_docs.select(
@@ -168,7 +147,7 @@ def absorb_paragraph_batch(
     )
     stored = read_stage(spark, root, "para_digests")
 
-    new_digests = run_stage(
+    run_stage(
         spark, staging, "para_digests",
         lambda: batch_first
         .join(stored, "digest", "left_anti")
@@ -218,43 +197,20 @@ def absorb_paragraph_batch(
     )
     n_new_digests = read_manifest(staging, "para_digests")["total_rows"]
     n_docs = read_manifest(staging, "deduped")["total_rows"]
-    del new_digests
 
     metrics = {
         "batch_fingerprint": batch_fp,
         "batch_docs": n_docs,
         "batch_new_digests": n_new_digests,
     }
-    if iceberg_available(spark):
-        # table-level commits: one atomic append per stage from the
-        # MATERIALIZED staging snapshot (staging first — appending
-        # para_digests before the deduped relation is computed would
-        # anti-join the batch's own paragraphs away under lazy eval);
-        # deduped LAST = commit point, same as the file path.  A real
-        # catalog deployment drops the staging tables afterwards;
-        # the local staging sidecars are removed below either way.
-        for stage in ("para_digests", "deduped"):
-            append_stage_iceberg(
-                read_stage(spark, staging, stage), spark, root, stage,
-                batch_fp, metrics=metrics,
-            )
-    else:
-        _append_batch_files(
-            os.path.join(staging, "para_digests", "data"),
-            os.path.join(root, "para_digests", "data"), tag)
-        _append_batch_files(
-            os.path.join(staging, "deduped", "data"),
-            os.path.join(root, "deduped", "data"), tag)
-        for stage in ("para_digests", "deduped"):  # deduped LAST: commit
-            try:
-                prev = read_manifest(root, stage)["input_fingerprint"]
-            except OSError:
-                prev = "bootstrap"
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            commit_stage(root, stage, input_fingerprint=combined,
-                         metrics=metrics)
-    shutil.rmtree(staging, ignore_errors=True)
+    # both stages are staged before either appends — appending
+    # para_digests before the deduped relation is computed would
+    # anti-join the batch's own paragraphs away under lazy evaluation;
+    # deduped LAST = commit point
+    finish_commit(spark, root, staging, [
+        CommitOp("append", "para_digests", "para_digests"),
+        CommitOp("append", "deduped", "deduped"),
+    ], metrics, batch_fp=batch_fp)
 
     return {
         "status": "committed",

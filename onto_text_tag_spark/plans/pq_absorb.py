@@ -34,27 +34,18 @@ tests/test_pq_absorb.py.
 from __future__ import annotations
 
 import hashlib
-import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from onto_text_tag_spark.operators.similarity import pq_encode_with_error
-from onto_text_tag_spark.plans.kg_absorb import (
-    _append_batch_files,
-    _recover_swap,
-    _swap_subtree,
-)
 from onto_text_tag_spark.sinks import (
-    append_stage_iceberg,
-    commit_stage,
-    drop_stage_table,
-    iceberg_available,
+    CommitOp,
+    begin_commit,
+    finish_commit,
     read_manifest,
     read_stage,
     run_stage,
-    snapshot_log,
     write_stage,
 )
 
@@ -131,34 +122,20 @@ def absorb_pq_batch(
     map), file-append their ``(vec_id, codes, recon_err)`` rows, merge
     the per-batch error stats additively.  Exactly-once via the batch
     fingerprint in the ``pq_codes`` snapshot log (the last seal = the
-    commit point); an edited codebook table refuses.
-
-    Works under BOTH stage backends: file-backed roots commit via
-    ``_append_batch_files`` + ``_swap_subtree`` + ``commit_stage``;
-    under an Iceberg session catalog the same staged snapshot commits
-    via ``sinks.append_stage_iceberg`` — and because ``pq_err_stats``
-    is one additive ROW per batch, its table commit is an append too
-    (the file path's swap exists only because a parquet dir can't
-    grow a row in place), so this path needs no replace analog."""
-    ice = iceberg_available(spark)
+    commit point); an edited codebook table refuses.  Works under both
+    stage backends."""
     t0 = time.time()
     tag = hashlib.md5(("pq:" + batch_fp).encode()).hexdigest()[:12]
     stored_fp = read_manifest(root, "pq_codebooks")["metrics"][
         "codebook_fingerprint"]
 
-    if any(
-        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
-        for s in snapshot_log(root, "pq_codes")
-    ):
+    staging = begin_commit(root, tag, batch_fp, log_stage="pq_codes")
+    if staging is None:
         return {
             "status": "noop_already_committed",
             "n_vecs_total": read_manifest(root, "pq_codes")["total_rows"],
             "sec": round(time.time() - t0, 2),
         }
-
-    live_stats = os.path.join(root, "pq_err_stats", "data")
-    if not ice:
-        _recover_swap(live_stats)
 
     codebooks = load_codebooks(spark, root)
     if _codebook_fingerprint(codebooks) != stored_fp:
@@ -181,7 +158,6 @@ def absorb_pq_batch(
         .join(seen, "vec_id", "left_anti")
     )
 
-    staging = os.path.join(root, "_staging", tag)
     delta_codes = run_stage(
         spark, staging, "codes_delta",
         lambda: pq_encode_with_error(new_vecs, codebooks),
@@ -191,40 +167,21 @@ def absorb_pq_batch(
         F.count("*").cast("long").alias("n"),
         F.coalesce(F.sum("recon_err"), F.lit(0.0)).alias("sum_err"),
     ).select(F.lit(batch_fp).alias("batch"), "n", "sum_err")
-    if not ice:
-        run_stage(
-            spark, staging, "merged_stats",
-            lambda: read_stage(spark, root, "pq_err_stats")
-            .unionByName(batch_stats),
-            input_fingerprint=batch_fp,
-        )
+    run_stage(
+        spark, staging, "merged_stats",
+        lambda: read_stage(spark, root, "pq_err_stats")
+        .unionByName(batch_stats),
+        input_fingerprint=batch_fp,
+    )
     n_new = read_manifest(staging, "codes_delta")["total_rows"]
 
     metrics = {"batch_fingerprint": batch_fp, "batch_vecs": n_new,
                "codebook_fingerprint": stored_fp}
-    if ice:
-        # stats first, codes LAST = commit point (matches the file
-        # path's seal order); both table appends derive from the
-        # MATERIALIZED codes_delta staging snapshot, and each is
-        # per-stage idempotent on replay
-        append_stage_iceberg(batch_stats, spark, root, "pq_err_stats",
-                             batch_fp, metrics=metrics)
-        append_stage_iceberg(delta_codes, spark, root, "pq_codes",
-                             batch_fp, metrics=metrics)
-        drop_stage_table(spark, staging, "codes_delta")
-    else:
-        _append_batch_files(
-            os.path.join(staging, "codes_delta", "data"),
-            os.path.join(root, "pq_codes", "data"), tag)
-        _swap_subtree(os.path.join(staging, "merged_stats", "data"),
-                      live_stats)
-        for stage in ("pq_err_stats", "pq_codes"):  # codes seal = commit
-            prev = read_manifest(root, stage)["input_fingerprint"]
-            combined = hashlib.md5(
-                f"{prev}+{batch_fp}".encode()).hexdigest()
-            commit_stage(root, stage, input_fingerprint=combined,
-                         metrics=metrics)
-    shutil.rmtree(staging, ignore_errors=True)
+    # codes append LAST = commit point
+    finish_commit(spark, root, staging, [
+        CommitOp("replace", "merged_stats", "pq_err_stats"),
+        CommitOp("append", "codes_delta", "pq_codes"),
+    ], metrics, batch_fp=batch_fp)
     return {
         "status": "committed",
         "n_new_vecs": n_new,

@@ -35,6 +35,13 @@ snapshot write:
                        files (plain overwrite = commit + immediate
                        expire-snapshots) and historical reads of them
                        raise.
+* ``begin_commit`` / ``finish_commit`` — the staged commit behind every
+                       incremental operation (absorb, retraction, fold,
+                       compaction, refresh): recover torn swaps, stage
+                       the new content as resumable snapshots, then
+                       append / replace / partition-replace live stages
+                       on either backend and seal them, commit point
+                       last.
 
 Iceberg provides this natively (snapshots + manifests); its runtime jar
 is not present in this sandbox, so the same contract is implemented on
@@ -53,8 +60,10 @@ import hashlib
 import json
 import os
 import re
+import shutil
 import time
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,8 +130,8 @@ def write_stage(
     spark = df.sparkSession
     if iceberg_available(spark):
         return _write_stage_iceberg(
-            df, spark, root, stage, manifest_path, marker_path,
-            partition_by or [], input_fingerprint, metrics,
+            df, spark, root, stage, partition_by or [],
+            input_fingerprint, metrics,
         )
 
     writer = df.write.mode("overwrite")
@@ -141,8 +150,6 @@ def _write_stage_iceberg(
     spark: SparkSession,
     root: str,
     stage: str,
-    manifest_path: str,
-    marker_path: str,
     partition_by: list[str],
     input_fingerprint: str,
     metrics: dict | None,
@@ -159,7 +166,26 @@ def _write_stage_iceberg(
     if partition_by:
         writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
     writer.createOrReplace()
+    return _seal_table(spark, root, stage, table, partition_by,
+                       input_fingerprint, metrics, df.schema.jsonValue())
 
+
+def _seal_table(
+    spark: SparkSession,
+    root: str,
+    stage: str,
+    table: str,
+    partition_by: list[str],
+    input_fingerprint: str,
+    metrics: dict | None,
+    schema_json,
+) -> dict:
+    """Seal a table-backed stage: per-partition row lineage from one
+    aggregate over the committed table, recorded with the table
+    identity in the sidecar manifest + marker + snapshot log."""
+    from pyspark.sql import functions as F
+
+    _data, manifest_path, marker_path = _stage_paths(root, stage)
     committed = spark.table(table)
     if partition_by:
         # values recorded as strings, matching the file-based path's
@@ -185,7 +211,7 @@ def _write_stage_iceberg(
         "partitions": part_counts,
         "total_rows": sum(p["rows"] for p in part_counts),
         "metrics": metrics or {},
-        "schema": df.schema.jsonValue(),
+        "schema": schema_json,
     }
     return _commit_manifest(manifest_path, marker_path, manifest)
 
@@ -213,8 +239,6 @@ def write_stage_branches(
     8-core wall time 32%.  Sequential jobs also keep peak shuffle
     footprint to one branch at a time — the property that matters when
     each branch is corpus-sized."""
-    import shutil
-
     data_path, manifest_path, marker_path = _stage_paths(root, stage)
     first_df = next(iter(branches.values()))
     if iceberg_available(first_df.sparkSession):
@@ -230,8 +254,8 @@ def write_stage_branches(
                 partition_col, F.lit(value))
             union = part if union is None else union.unionByName(part)
         return _write_stage_iceberg(
-            union, first_df.sparkSession, root, stage, manifest_path,
-            marker_path, [partition_col], input_fingerprint, metrics,
+            union, first_df.sparkSession, root, stage, [partition_col],
+            input_fingerprint, metrics,
         )
     shutil.rmtree(data_path, ignore_errors=True)
     schema_json = None
@@ -348,74 +372,6 @@ def _commit_manifest(
     return manifest
 
 
-def replace_stage_iceberg(
-    df: DataFrame,
-    spark: SparkSession,
-    root: str,
-    stage: str,
-    batch_fp: str,
-    metrics: dict | None = None,
-) -> dict:
-    """Table-level analog of the staged-file SWAP (``_swap_subtree`` +
-    ``commit_stage``): atomically replace the stage's catalog table
-    via ``writeTo(table).createOrReplace()`` from a MATERIALIZED
-    staging snapshot, and re-seal the sidecar manifest chaining the
-    batch fingerprint exactly like ``append_stage_iceberg``.
-
-    The caller MUST pass a df read from a materialized staging stage
-    (never a plan that scans the table being replaced — read-write
-    cycles on one table are the hazard the staged protocol exists to
-    prevent).  Per-stage idempotent via the batch fingerprint in the
-    snapshot log; a replay with the staging snapshot still current
-    re-replaces with identical content, which is safe (the kg_absorb
-    ``overwritePartitions`` slice established the same argument)."""
-    data_path, manifest_path, marker_path = _stage_paths(root, stage)
-    del data_path
-    for snap in snapshot_log(root, stage):
-        if snap.get("metrics", {}).get("batch_fingerprint") == batch_fp:
-            return read_manifest(root, stage)
-    prev = read_manifest(root, stage)
-    if prev.get("format") != "iceberg":
-        raise ValueError(
-            f"replace_stage_iceberg: stage {stage!r} under {root!r} is "
-            "file-backed (use _swap_subtree + commit_stage)"
-        )
-    table = prev["table"]
-    df.writeTo(table).createOrReplace()
-    total = spark.table(table).count()
-    combined = hashlib.md5(
-        f"{prev.get('input_fingerprint', '')}+{batch_fp}".encode()
-    ).hexdigest()
-    manifest = {
-        "stage": stage,
-        "written_at_unix": int(time.time()),
-        "input_fingerprint": combined,
-        "format": "iceberg",
-        "table": table,
-        "partition_by": prev.get("partition_by", []),
-        "partitions": [{"rows": total}],
-        "total_rows": total,
-        "metrics": {**(metrics or {}), "batch_fingerprint": batch_fp},
-        "schema": prev.get("schema"),
-    }
-    return _commit_manifest(manifest_path, marker_path, manifest)
-
-
-def drop_stage_table(spark: SparkSession, root: str, stage: str) -> None:
-    """Drop the catalog table a staging stage materialized into — the
-    table-backed analog of ``shutil.rmtree`` on a staging subtree
-    (which still removes the sidecar manifests either way).  A table
-    the session catalog does not know (e.g. a test harness bridging
-    ``writeTo`` to its own registry) is skipped, not an error."""
-    table = iceberg_stage_table(spark, root, stage)
-    try:
-        exists = spark.catalog.tableExists(table)
-    except Exception:
-        exists = False
-    if exists:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def stage_is_current(root: str, stage: str, input_fingerprint: str = "") -> bool:
     _data, _manifest, marker_path = _stage_paths(root, stage)
     if not os.path.exists(marker_path):
@@ -426,134 +382,6 @@ def stage_is_current(root: str, stage: str, input_fingerprint: str = "") -> bool
     except (OSError, json.JSONDecodeError):
         return False
     return recorded == input_fingerprint
-
-
-def append_stage_iceberg(
-    df: DataFrame,
-    spark: SparkSession,
-    root: str,
-    stage: str,
-    batch_fp: str,
-    metrics: dict | None = None,
-) -> dict:
-    """Table-level analog of the file-append incremental commit
-    (``_append_batch_files`` + ``commit_stage``) under an Iceberg
-    session catalog: the batch rows land via ``writeTo(table).append()``
-    — ONE atomic Iceberg snapshot — and the sidecar manifest/snapshot
-    log re-seals over the grown table, chaining the input fingerprint
-    exactly like the file path does.
-
-    Per-stage idempotent: a ``batch_fp`` already present in this
-    stage's snapshot log returns the current manifest without touching
-    the table (the analog of ``_append_batch_files`` skipping landed
-    batch-prefixed files), so a crash between two stage appends
-    replays safely — re-running the absorb re-appends only the stages
-    whose seal is missing.
-
-    This is the append half of the Iceberg incremental protocol the
-    round-3 refusal (``require_file_backed_stages``) named as missing;
-    the ``_swap_subtree`` analog (RewriteFiles / ``createOrReplace``)
-    remains file-backed-only, so swap-dependent paths still refuse.
-    """
-    data_path, manifest_path, marker_path = _stage_paths(root, stage)
-    del data_path
-    for snap in snapshot_log(root, stage):
-        if snap.get("metrics", {}).get("batch_fingerprint") == batch_fp:
-            return read_manifest(root, stage)
-    prev = read_manifest(root, stage)
-    if prev.get("format") != "iceberg":
-        raise ValueError(
-            f"append_stage_iceberg: stage {stage!r} under {root!r} is "
-            "file-backed (use _append_batch_files + commit_stage)"
-        )
-    table = prev["table"]
-    df.writeTo(table).append()
-    total = spark.table(table).count()
-    combined = hashlib.md5(
-        f"{prev.get('input_fingerprint', '')}+{batch_fp}".encode()
-    ).hexdigest()
-    manifest = {
-        "stage": stage,
-        "written_at_unix": int(time.time()),
-        "input_fingerprint": combined,
-        "format": "iceberg",
-        "table": table,
-        "partition_by": prev.get("partition_by", []),
-        "partitions": [{"rows": total}],
-        "total_rows": total,
-        "metrics": {**(metrics or {}), "batch_fingerprint": batch_fp},
-        "schema": prev.get("schema"),
-    }
-    return _commit_manifest(manifest_path, marker_path, manifest)
-
-
-def replace_stage_partitions_iceberg(
-    df: DataFrame,
-    spark: SparkSession,
-    root: str,
-    stage: str,
-) -> None:
-    """Dynamic-partition replacement under an Iceberg catalog:
-    ``writeTo(table).overwritePartitions()`` atomically swaps exactly
-    the partitions PRESENT in ``df`` and leaves every other partition
-    untouched — the table-level analog of ``_swap_subtree`` on one
-    hive branch directory (e.g. the co-occurrence ``pred=`` branch of
-    the triples stage).  The caller seals the stage manifest
-    afterwards (``seal_stage_iceberg``); replays are safe when ``df``
-    is a MATERIALIZED staging snapshot (re-running overwrites with the
-    same content)."""
-    prev = read_manifest(root, stage)
-    if prev.get("format") != "iceberg":
-        raise ValueError(
-            f"replace_stage_partitions_iceberg: stage {stage!r} under "
-            f"{root!r} is file-backed (use _swap_subtree)"
-        )
-    df.writeTo(prev["table"]).overwritePartitions()
-
-
-def seal_stage_iceberg(
-    spark: SparkSession,
-    root: str,
-    stage: str,
-    batch_fp: str,
-    metrics: dict | None = None,
-    keep_fingerprint: bool = False,
-) -> dict:
-    """Re-seal a table-backed stage after out-of-band table commits
-    (append / overwritePartitions): recompute the row total from the
-    live table and chain the input fingerprint — the Iceberg analog of
-    ``commit_stage``'s parquet-footer re-scan.  ``keep_fingerprint``
-    keeps the previous input fingerprint instead of chaining — the
-    content-identical MAINTENANCE seal (folds/compaction), where the
-    stage's logical inputs are unchanged."""
-    _data, manifest_path, marker_path = _stage_paths(root, stage)
-    prev = read_manifest(root, stage)
-    if prev.get("format") != "iceberg":
-        raise ValueError(
-            f"seal_stage_iceberg: stage {stage!r} under {root!r} is "
-            "file-backed (use commit_stage)"
-        )
-    table = prev["table"]
-    total = spark.table(table).count()
-    combined = (
-        prev.get("input_fingerprint", "") if keep_fingerprint
-        else hashlib.md5(
-            f"{prev.get('input_fingerprint', '')}+{batch_fp}".encode()
-        ).hexdigest()
-    )
-    manifest = {
-        "stage": stage,
-        "written_at_unix": int(time.time()),
-        "input_fingerprint": combined,
-        "format": "iceberg",
-        "table": table,
-        "partition_by": prev.get("partition_by", []),
-        "partitions": [{"rows": total}],
-        "total_rows": total,
-        "metrics": metrics or {},
-        "schema": prev.get("schema"),
-    }
-    return _commit_manifest(manifest_path, marker_path, manifest)
 
 
 def read_stage(
@@ -707,18 +535,17 @@ def stage_is_table_backed(root: str, stage: str) -> bool:
 
 
 def require_file_backed_stages(spark: SparkSession, op: str) -> None:
-    """Refuse the file-level incremental protocol under an Iceberg
-    session catalog.
+    """Refuse an operation that acts on local stage ``data/`` dirs
+    under an Iceberg session catalog.
 
-    The absorb/retract/fold/compact paths mutate stage ``data/`` dirs
-    in place (``_append_batch_files``, ``_swap_subtree``) and re-seal
-    them with ``commit_stage``'s parquet-footer scan.  Under
-    ``iceberg_available`` every ``write_stage`` — including staging
-    writes — lands in a catalog table instead, so those dirs do not
-    exist and the protocol would die midway with FileNotFoundError
-    (or worse, act on a stale dir).  The table-level analogs (Iceberg
-    append / RewriteFiles commits) are not implemented; refuse up
-    front with the honest message instead."""
+    Under ``iceberg_available`` every ``write_stage`` — including
+    staging writes — lands in a catalog table, so no ``data/`` dir
+    exists and such an operation would die midway with
+    FileNotFoundError (or worse, act on a stale dir).  Small-files
+    compaction (Iceberg's own ``rewrite_data_files`` owns it) and the
+    dictionary/ontology updates read live stages by parquet path;
+    they refuse up front with the honest message instead.  Staged
+    commits themselves (``finish_commit``) run on both backends."""
     if iceberg_available(spark):
         raise NotImplementedError(
             f"{op}: the file-level incremental-commit protocol is not "
@@ -743,7 +570,8 @@ def commit_stage(
     ``jobs/kg_update.py``): rebuild the per-partition lineage manifest
     from the parquet footers, rewrite the marker under the new input
     fingerprint, and append a new snapshot to the log.  The Iceberg
-    analog is the metadata commit that seals an append/merge operation."""
+    analog is the metadata commit that seals an append/merge operation;
+    ``finish_commit`` seals through it."""
     if stage_is_table_backed(root, stage):
         raise NotImplementedError(
             f"commit_stage({stage!r}): stage is table-backed (Iceberg "
@@ -766,6 +594,310 @@ def commit_stage(
         data_path, manifest_path, marker_path, stage,
         partition_by, input_fingerprint, metrics, schema_json,
     )
+
+
+# -- staged commits ----------------------------------------------------------
+#
+#   staging = begin_commit(root, name, batch_fp, log_stage)
+#   ... run_stage(spark, staging, ...) materializes the new content ...
+#   finish_commit(spark, root, staging, [CommitOp(...), ...], ...)
+
+_SWAP_OLD = ".swap-old"
+_SWAP_NEW = ".swap-new"
+_TMP = ".tmp"
+
+
+@dataclass(frozen=True)
+class CommitOp:
+    """One step of ``finish_commit``: ``kind="append"`` adds staged
+    stage ``src``'s rows to live stage ``dst``; ``kind="replace"``
+    replaces ``dst`` with ``src``.  With ``part=(col, value)`` either
+    acts on that one partition of ``dst`` only (``src`` rows carry no
+    ``col``)."""
+
+    kind: str
+    src: str
+    dst: str
+    part: tuple[str, str] | None = None
+
+
+def batch_committed(root: str, stage: str, batch_fp: str) -> bool:
+    """True when a snapshot in ``stage``'s log was sealed by
+    ``batch_fp``."""
+    return any(
+        s.get("metrics", {}).get("batch_fingerprint") == batch_fp
+        for s in snapshot_log(root, stage)
+    )
+
+
+def begin_commit(
+    root: str,
+    name: str,
+    batch_fp: str | None = None,
+    log_stage: str | None = None,
+) -> str | None:
+    """Entry step of a staged commit: recover every torn swap and
+    append under ``root``, then return the staging path
+    ``<root>/_staging/<name>`` — or None when ``batch_fp`` already
+    sealed ``log_stage`` (the commit point), i.e. the batch is
+    committed and the caller no-ops.
+
+    Without ``batch_fp`` (maintenance: folds, compaction, refreshes)
+    the staging dir is cleared first: staged snapshots are resumed by
+    fingerprint, and a maintenance fingerprint cannot tell this run's
+    snapshot from a stale one."""
+    _recover_swaps(root)
+    if batch_fp and log_stage and batch_committed(root, log_stage, batch_fp):
+        return None
+    staging = os.path.join(root, "_staging", name)
+    if batch_fp is None:
+        shutil.rmtree(staging, ignore_errors=True)
+    return staging
+
+
+def finish_commit(
+    spark: SparkSession,
+    root: str,
+    staging: str,
+    ops: list[CommitOp],
+    metrics: dict | None = None,
+    batch_fp: str | None = None,
+    fingerprint: str | None = None,
+    seal: list[str] | None = None,
+) -> dict:
+    """Commit step: run ``ops`` in order on the backend the stages'
+    manifests name, seal the touched stages, drop the staging dir and
+    staging tables.  Returns the manifest of the last sealed stage.
+
+    Seals run in ``seal`` order (default: the stages ``ops`` touch, in
+    first-touch order); the LAST seal is the commit point.  Each seal's
+    input fingerprint is
+
+    * chained, ``md5(prev + "+" + batch_fp)``, when ``batch_fp`` is
+      given (batch commits; ``metrics`` gains ``batch_fingerprint``);
+    * ``fingerprint`` when given (a refresh keyed on its inputs);
+    * else kept, with ``metrics`` merged over the stage's previous
+      metrics (content-identical maintenance: folds, compaction).
+
+    Replays are safe: every op reads a materialized staged snapshot,
+    file appends land under deterministic names, and each finished op
+    leaves a marker in the staging dir, so a replay skips the ops (and,
+    for batch commits, the seals) that already landed."""
+    seal = seal or list(dict.fromkeys(op.dst for op in ops))
+    metrics = metrics or {}
+    # validate every op before the first mutation
+    on_table = {}
+    for op in ops:
+        staged = read_manifest(staging, op.src)
+        on_table[op] = staged.get("format") == "iceberg"
+        live = _manifest_or_empty(root, op.dst)
+        if live and (live.get("format") == "iceberg") != on_table[op]:
+            raise ValueError(
+                f"{op.dst!r} under {root!r} and its staged snapshot "
+                f"{op.src!r} are on different stage backends"
+            )
+    tag = hashlib.md5(batch_fp.encode()).hexdigest()[:12] if batch_fp else ""
+
+    os.makedirs(staging, exist_ok=True)
+    done = [os.path.join(staging, f"_op{i}.done") for i in range(len(ops))]
+    replay = bool(ops) and os.path.exists(done[-1])
+    for op, marker in zip(ops, done):
+        if os.path.exists(marker):
+            continue
+        if on_table[op]:
+            _table_op(spark, root, staging, op, batch_fp or "")
+        else:
+            _file_op(root, staging, op, tag)
+        open(marker, "w").close()
+
+    for stage in seal:
+        if replay and batch_fp and batch_committed(root, stage, batch_fp):
+            continue
+        _seal(spark, root, staging, stage, ops, metrics, batch_fp,
+              fingerprint)
+
+    for st in os.listdir(staging):
+        if stage_is_table_backed(staging, st):
+            _drop_stage_table(spark, staging, st)
+    shutil.rmtree(staging, ignore_errors=True)
+    return read_manifest(root, seal[-1])
+
+
+def _manifest_or_empty(root: str, stage: str) -> dict:
+    try:
+        return read_manifest(root, stage)
+    except OSError:
+        return {}
+
+
+def _seal(
+    spark: SparkSession,
+    root: str,
+    staging: str,
+    stage: str,
+    ops: list[CommitOp],
+    metrics: dict,
+    batch_fp: str | None,
+    fingerprint: str | None,
+) -> dict:
+    prev = _manifest_or_empty(root, stage)
+    # a stage an op creates takes its layout from the staged snapshot
+    src = next((_manifest_or_empty(staging, op.src)
+                for op in ops if op.dst == stage), {})
+    if batch_fp is not None:
+        prev_fp = prev.get("input_fingerprint", "bootstrap")
+        fp = hashlib.md5(f"{prev_fp}+{batch_fp}".encode()).hexdigest()
+        metrics = {**metrics, "batch_fingerprint": batch_fp}
+    elif fingerprint is not None:
+        fp = fingerprint
+    else:
+        fp = prev["input_fingerprint"]
+        metrics = {**(prev.get("metrics") or {}), **metrics}
+    layout = prev or src
+    partition_by = layout.get("partition_by") or []
+    schema = prev.get("schema") or src.get("schema")
+    if layout.get("format") == "iceberg":
+        table = layout["table"] if prev else iceberg_stage_table(
+            spark, root, stage)
+        return _seal_table(spark, root, stage, table, partition_by, fp,
+                           metrics, schema)
+    return commit_stage(root, stage, partition_by=partition_by,
+                        input_fingerprint=fp, metrics=metrics,
+                        schema_json=schema)
+
+
+def _file_op(root: str, staging: str, op: CommitOp, tag: str) -> None:
+    src = os.path.join(staging, op.src, "data")
+    dst = os.path.join(root, op.dst, "data")
+    if op.part:
+        dst = os.path.join(dst, f"{op.part[0]}={op.part[1]}")
+    if op.kind == "append":
+        _append_files(src, dst, tag)
+    else:
+        _swap_dir(src, dst)
+
+
+def _append_files(src: str, dst: str, tag: str) -> None:
+    """File-level append: copy the staged part-files into ``dst`` under
+    deterministic ``batch-<tag>-NNNNN.parquet`` names.  Each copy lands
+    under a hidden temporary name first and is renamed into place, so
+    a live name only ever holds a complete file and a replay skips
+    exactly the files that landed."""
+    os.makedirs(dst, exist_ok=True)
+    files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    for i, f in enumerate(files):
+        name = f"batch-{tag}-{i:05d}.parquet"
+        final = os.path.join(dst, name)
+        if os.path.exists(final):
+            continue
+        tmp = os.path.join(dst, f".{name}{_TMP}")
+        shutil.copy2(os.path.join(src, f), tmp)
+        os.replace(tmp, final)
+
+
+def _swap_aside(live: str, suffix: str) -> str:
+    # hidden, so partition discovery over the parent never reads it
+    parent, name = os.path.split(live)
+    return os.path.join(parent, f".{name}{suffix}")
+
+
+def _swap_dir(src: str, live: str) -> None:
+    """Replace directory ``live`` with a copy of ``src``: copy into a
+    hidden sibling ``.swap-new`` dir, rename ``live`` aside to
+    ``.swap-old``, rename the complete copy into place, drop the old
+    tree.  At every crash point ``live`` is the complete old tree, the
+    complete new tree, or absent with the old tree aside —
+    ``_recover_swaps`` rolls that last state back."""
+    new, old = _swap_aside(live, _SWAP_NEW), _swap_aside(live, _SWAP_OLD)
+    shutil.rmtree(new, ignore_errors=True)
+    shutil.copytree(src, new)
+    if os.path.exists(live):
+        os.rename(live, old)
+    os.rename(new, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _recover_swaps(root: str) -> None:
+    """Undo what a crash mid-``_swap_dir`` / mid-``_append_files``
+    left anywhere under ``root``: an old tree set aside with no live
+    tree is renamed back; one with a live tree (the swap completed) is
+    dropped, as is every partial ``.swap-new`` copy and temporary
+    append file.  Staged snapshots are never swapped and not walked."""
+    for dirpath, dirs, files in os.walk(root):
+        if dirpath == root and "_staging" in dirs:
+            dirs.remove("_staging")
+        aside = [d for d in dirs
+                 if d.startswith(".") and d.endswith((_SWAP_OLD, _SWAP_NEW))]
+        for d in aside:
+            path = os.path.join(dirpath, d)
+            # ".<name>" + suffix; both suffixes have the same length
+            live = os.path.join(dirpath, d[1:-len(_SWAP_OLD)])
+            if d.endswith(_SWAP_NEW) or os.path.exists(live):
+                shutil.rmtree(path)
+            else:
+                os.rename(path, live)
+        dirs[:] = [d for d in dirs if d not in aside]
+        for f in files:
+            if f.startswith(".batch-") and f.endswith(_TMP):
+                os.remove(os.path.join(dirpath, f))
+
+
+def _table_op(
+    spark: SparkSession, root: str, staging: str, op: CommitOp, fp: str
+) -> None:
+    """``CommitOp`` on a table-backed stage: one Iceberg commit from the
+    materialized staged snapshot (never a plan over the table it
+    writes)."""
+    from pyspark.sql import functions as F
+
+    live = _manifest_or_empty(root, op.dst)
+    table = live.get("table") or iceberg_stage_table(spark, root, op.dst)
+    df = read_stage(spark, staging, op.src)
+    if op.part:
+        col, value = op.part
+        df = df.withColumn(col, F.lit(value)).select(
+            *spark.table(table).columns)
+    if op.kind == "append":
+        df.writeTo(table).append()
+    elif op.part is None:
+        partition_by = (live or read_manifest(staging, op.src)).get(
+            "partition_by") or []
+        writer = df.writeTo(table)
+        if partition_by:
+            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
+        writer.createOrReplace()
+    elif read_manifest(staging, op.src)["total_rows"]:
+        # dynamic partition replacement swaps exactly the partition
+        # present in df and leaves every other one untouched
+        df.writeTo(table).overwritePartitions()
+    else:
+        # overwritePartitions with no rows replaces nothing: clear the
+        # partition — a metadata-only DELETE where the catalog routes
+        # SQL to the table, else a staged whole-table rewrite
+        try:
+            spark.sql(f"DELETE FROM {table} WHERE {col} = '{value}'")
+        except Exception:
+            keep = run_stage(
+                spark, staging, f"{op.dst}_keep_{op.src}",
+                lambda: spark.table(table).where(F.col(col) != value),
+                input_fingerprint=fp,
+            )
+            (keep.writeTo(table)
+             .partitionedBy(F.col(col)).createOrReplace())
+
+
+def _drop_stage_table(spark: SparkSession, root: str, stage: str) -> None:
+    """Drop the catalog table a staging stage materialized into.  A
+    table the session catalog does not know (e.g. a test harness
+    bridging ``writeTo`` to its own registry) is skipped, not an
+    error."""
+    table = iceberg_stage_table(spark, root, stage)
+    try:
+        exists = spark.catalog.tableExists(table)
+    except Exception:
+        exists = False
+    if exists:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def run_stage(

@@ -335,11 +335,7 @@ def start_crawl_sink(
         compact_stage,
         retract_batch,
     )
-    from onto_text_tag_spark.sinks import (
-        iceberg_available,
-        read_manifest,
-        read_stage,
-    )
+    from onto_text_tag_spark.sinks import read_manifest, read_stage
 
     dedup_root = os.path.join(root, "dedup")
     kg_root = os.path.join(root, "kg")

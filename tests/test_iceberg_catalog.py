@@ -210,17 +210,54 @@ def test_run_stage_resume_under_iceberg(iceberg_session, tmp_path):
 
 
 def test_file_level_protocol_refused_under_catalog(iceberg_session, tmp_path):
-    """The ONE remaining file-maintenance entry point — small-files
-    compaction, which Iceberg's own ``rewrite_data_files`` owns — must
-    refuse UP FRONT under a catalog rather than die mid-protocol with
-    FileNotFoundError.  Every absorb / retract / fold path commits
-    table-level since rounds 4-5 and is covered by the equality tests
-    in this module."""
+    """Small-files compaction, which Iceberg's own ``rewrite_data_files``
+    owns, must refuse UP FRONT under a catalog rather than die
+    mid-protocol with FileNotFoundError.  Every absorb / retract / fold
+    path commits table-level through sinks.finish_commit and is covered
+    by the equality tests in this module."""
     spark, _registry = iceberg_session
     from onto_text_tag_spark.plans.kg_absorb import compact_stage
 
     with pytest.raises(NotImplementedError, match="Iceberg"):
         compact_stage(spark, str(tmp_path / "kg"), "mentions")
+
+
+def test_dictionary_updates_refused_under_catalog(iceberg_session, tmp_path):
+    """update_dictionary / update_ontology read live stages by parquet
+    path, which a catalog session never writes: they must refuse UP
+    FRONT and leave the root byte-for-byte untouched."""
+    spark, _registry = iceberg_session
+    from onto_text_tag_spark.corpus import mini_ontology
+    from onto_text_tag_spark.dictionary import build_dictionary_rows
+    from onto_text_tag_spark.plans.kg_absorb import init_kg_root
+    from onto_text_tag_spark.plans.kg_dict_update import (
+        update_dictionary,
+        update_ontology,
+    )
+
+    onto = mini_ontology()
+    dict_rows = build_dictionary_rows(onto)
+    root = str(tmp_path / "kg_dict_ice")
+    init_kg_root(spark, root, onto)
+
+    def tree():
+        out = {}
+        for dirpath, _dirs, files in os.walk(root):
+            for f in files:
+                path = os.path.join(dirpath, f)
+                with open(path, "rb") as fh:
+                    out[os.path.relpath(path, root)] = fh.read()
+        return out
+
+    before = tree()
+    docs = spark.createDataFrame([("u1", "nicotine")],
+                                 "url string, text string")
+    with pytest.raises(NotImplementedError, match="update_dictionary"):
+        update_dictionary(spark, root, docs, dict_rows, dict_rows[:-1],
+                          batch_fp="d1")
+    with pytest.raises(NotImplementedError, match="update_ontology"):
+        update_ontology(spark, root, onto, batch_fp="o1")
+    assert tree() == before
 
 
 def test_commit_stage_refused_on_table_backed_stage(
@@ -335,7 +372,7 @@ def test_pq_absorb_under_catalog_equals_rebuild(iceberg_session, tmp_path):
 def test_ivf_absorb_under_catalog_equals_rebuild(iceberg_session, tmp_path):
     """VERDICT r4 item 3, the MERGE half: ivf_cell_stats is a
     keyed-additive relation, so its table commit goes through
-    sinks.replace_stage_iceberg (atomic createOrReplace from the
+    a replace commit (atomic createOrReplace from the
     materialized staging snapshot) — stored assignments and merged
     stats must equal a from-scratch build over the union."""
     spark, _registry = iceberg_session
@@ -394,7 +431,7 @@ def test_ivf_absorb_under_catalog_equals_rebuild(iceberg_session, tmp_path):
 def test_media_absorb_under_catalog_equals_batch(iceberg_session, tmp_path):
     """VERDICT r4 item 3, the media family: perceptual-dedup roots
     (signature store + pair ledger, both append-grown) commit
-    table-level via append_stage_iceberg and must equal the batch
+    table-level via append commits and must equal the batch
     operator over the union, with replays no-op."""
     spark, _registry = iceberg_session
     import numpy as np
@@ -468,11 +505,11 @@ def test_media_absorb_under_catalog_equals_batch(iceberg_session, tmp_path):
 
 
 def test_paragraph_absorb_under_catalog_equals_rebuild(
-        iceberg_session, tmp_path):
+        iceberg_session, tmp_path, monkeypatch):
     """VERDICT r3 item 7: the table-level incremental protocol, proven
     on the append-only paragraph-absorb path — absorbing batches under
     the Iceberg session catalog (writeTo(...).append() per stage via
-    sinks.append_stage_iceberg) must equal the batch operator over the
+    sinks.finish_commit) must equal the batch operator over the
     union, replays must no-op, and the sidecar snapshot log must chain
     fingerprints exactly like the file-backed path."""
     spark, registry = iceberg_session
@@ -529,31 +566,47 @@ def test_paragraph_absorb_under_catalog_equals_rebuild(
     assert r3["status"] == "noop_already_committed"
     assert read_para_deduped(spark, root).count() == n_before
 
-    # per-stage idempotency: a direct re-append of an already-sealed
-    # batch fingerprint is skipped (the crash-between-appends replay)
-    from onto_text_tag_spark.sinks import append_stage_iceberg
-
-    before = read_manifest(root, "para_digests")["total_rows"]
-    append_stage_iceberg(
-        spark.createDataFrame([(999,)], "digest long"),
-        spark, root, "para_digests", "fp-A",
-    )
-    assert read_manifest(root, "para_digests")["total_rows"] == before
-
     # sidecar log: init + one entry per committed batch, fingerprints
     # recorded in metrics
     log = snapshot_log(root, "deduped")
     fps = [s.get("metrics", {}).get("batch_fingerprint") for s in log]
     assert fps == [None, "fp-A", "fp-B"]
 
+    # per-stage idempotency: a crash between the two stage seals
+    # (para_digests sealed, deduped not) replays without re-appending
+    from onto_text_tag_spark import sinks
+
+    real_seal = sinks._seal_table
+    crashed = []
+
+    def crash_once(spark_, root_, stage, *args):
+        if root_ == root and stage == "deduped" and not crashed:
+            crashed.append(stage)
+            raise RuntimeError("injected crash before the commit point")
+        return real_seal(spark_, root_, stage, *args)
+
+    monkeypatch.setattr(sinks, "_seal_table", crash_once)
+    batch_c = spark.createDataFrame(
+        [("c01", "crash replay body\nAccept all cookies", "en")], schema)
+    with pytest.raises(RuntimeError, match="injected"):
+        absorb_paragraph_batch(spark, root, batch_c, "fp-C")
+    n_digests = read_manifest(root, "para_digests")["total_rows"]
+    r4 = absorb_paragraph_batch(spark, root, batch_c, "fp-C")
+    assert r4["status"] == "committed"
+    assert read_stage(spark, root, "para_digests").count() == n_digests
+    for stage in ("para_digests", "deduped"):
+        fps = [s.get("metrics", {}).get("batch_fingerprint")
+               for s in snapshot_log(root, stage)]
+        assert fps == [None, "fp-A", "fp-B", "fp-C"], stage
+
 
 def test_kg_absorb_under_catalog_equals_file_backed(
         iceberg_session, tmp_path):
     """VERDICT r3 item 7, the named path: the kg_update absorb commits
     table-level under the Iceberg catalog — mention/doc_terms/
-    mention-triple appends via append_stage_iceberg, the merged
+    mention-triple appends, the merged
     co-occurrence branch via writeTo(...).overwritePartitions() (the
-    _swap_subtree analog) — and the resulting stages must EQUAL the
+    partition-replace commit) — and the resulting stages must EQUAL the
     file-backed absorb over the same two batches.  Replays no-op."""
     spark, registry = iceberg_session
     from pyspark.sql import functions as F
@@ -619,8 +672,8 @@ def test_kg_absorb_under_catalog_equals_file_backed(
 def test_dedup_absorb_under_catalog_equals_file_backed(
         iceberg_session, tmp_path):
     """VERDICT r4 item 3, the corpus-dedup family: the absorb's three
-    append stages commit via append_stage_iceberg and the merged
-    clusters map via replace_stage_iceberg — a catalog-backed root
+    append stages commit via table appends and the merged
+    clusters map via a table replace — a catalog-backed root
     absorbing the same batches as a file-backed root must agree on the
     live corpus view, the cluster map, the demoted set, and replays."""
     spark, _registry = iceberg_session
@@ -794,7 +847,7 @@ def test_retract_under_catalog_equals_build_without_batch(
 def test_kg_side_stages_under_catalog_equal_file_backed(
         iceberg_session, tmp_path):
     """Round 5: the --sketch/--trends side stages and the link-graph
-    absorb commit table-level (keyed merges via replace_stage_iceberg)
+    absorb commit table-level (keyed merges via table replaces)
     — each stage must equal its file-backed twin over the same
     batches, and refresh_nodes must rebuild the nodes table under the
     catalog."""
